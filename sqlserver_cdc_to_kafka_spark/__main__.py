@@ -172,6 +172,8 @@ def _run_pipeline(spark, sf_dir: str, sink_dir: str, cfg: EngineConfig) -> None:
     path = f"{sink_dir}/{topic}"
     out.write.mode("overwrite").parquet(path)
     n = spark.read.parquet(path).count()
+    for p in pages:  # cached by the pager; the write above was their last use
+        p.unpersist()
     _emit("topic_written", topic=topic, path=path, rows=n,
           snapshot_pages=len(pages))
 

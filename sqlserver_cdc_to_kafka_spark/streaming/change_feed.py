@@ -115,12 +115,13 @@ class MicroBatcher:
             self.feed, after, frontier, self.idx_col, self.batch_size
         ).cache()
         try:
-            rows = batch.count()
+            rows, new_offset = batch.agg(
+                F.count(F.lit(1)), F.max(self.idx_col)
+            ).collect()[0]
             if rows == 0:
                 return 0
             if self.sink is not None:
                 self.sink(batch, self._batch_id)
-            new_offset = batch.agg(F.max(self.idx_col)).collect()[0][0]
             # data + progress recorded together per batch id (T2): replaying
             # this batch id after a crash overwrites, never duplicates.
             self.progress_log.append(

@@ -14,12 +14,18 @@ it.
 dependencies (no Kafka broker in this environment; swapping ``_write_files``
 for a transactional producer keyed by batch id gives the Kafka version):
 
-1. write the batch under ``_staging/batch=<id>/`` (side-effect-free retry);
-2. atomically rename into place;
+1. write the batch under ``_staging/batch=<id>/`` (side-effect-free retry)
+   with an ``Observation`` attached, so the write's own job also counts the
+   rows and takes ``max(change_seq)`` — the batch is scanned once;
+2. if the write observed no rows, drop the stage directory and commit
+   nothing; otherwise atomically rename it into place;
 3. append the progress record ``(topic, kind, position, batch_id)`` to the
-   manifest — readers only see directories listed in the manifest, so a
-   crash between 2 and 3 is invisible and a replay of the same batch id is
-   idempotent (stage dir overwritten, manifest append deduped by batch id).
+   manifest, the position being the observed ``max(change_seq)`` — readers
+   only see directories listed in the manifest, so a crash between 2 and 3
+   is invisible and a replay of the same batch id is idempotent (stage dir
+   overwritten, manifest append deduped by batch id). A record commits
+   with its line's newline: an append a crash cut short leaves a torn last
+   line, which readers skip and the next append cuts off.
 """
 
 from __future__ import annotations
@@ -29,7 +35,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.streaming.change_feed import ProgressEntry
@@ -59,7 +65,18 @@ class TransactionalDirSink:
         if not os.path.exists(self.manifest_path):
             return []
         with open(self.manifest_path) as f:
-            return [json.loads(line) for line in f]
+            committed = f.read().rpartition("\n")[0]
+        # an append writes its newline last, so a last line without one is
+        # an append a crash cut short: never committed, so not a record
+        return [json.loads(line) for line in committed.splitlines()]
+
+    def _append(self, *records: dict) -> None:
+        """Append manifest records, first cutting off a torn last line (see
+        ``_records``) so the new records never fuse with it."""
+        with open(self.manifest_path, "a+b") as f:
+            f.seek(0)
+            f.truncate(f.read().rfind(b"\n") + 1)
+            f.write(b"".join(json.dumps(r).encode() + b"\n" for r in records))
 
     def committed_batches(self) -> dict[int, dict]:
         out: dict[int, dict] = {}
@@ -101,9 +118,19 @@ class TransactionalDirSink:
                 ids.add(rec["batch_id"])
         return ids
 
-    def commit_batch(self, batch: DataFrame, batch_id: int, position) -> bool:
-        """Idempotent commit: returns False (no-op) if this batch id is
-        already committed in the current epoch — the crash-replay path.
+    def commit_batch(
+        self, batch: DataFrame, batch_id: int, position=None
+    ) -> bool:
+        """Idempotent commit in one Spark job: returns False (no-op) if this
+        batch id is already committed in the current epoch — the
+        crash-replay path — or if the batch is empty.
+
+        The row count and the manifest position come from an Observation
+        on the write itself: ``count(1)`` and ``max(change_seq)``, so no
+        separate job scans the batch. Snapshot pages (all-null
+        ``change_seq``) record ``None``. A non-None ``position`` overrides
+        the observed one.
+
         A replay of a pre-reset batch id is NOT a duplicate: it overwrites
         the old data directory and its manifest record supersedes the old
         one (last write wins), which is exactly re-ingest-from-scratch."""
@@ -113,22 +140,25 @@ class TransactionalDirSink:
         final = os.path.join(self.root, "data", f"batch={batch_id}")
         if os.path.exists(stage):
             shutil.rmtree(stage)  # leftover from a crashed attempt
-        batch.write.mode("overwrite").parquet(stage)
+        obs = Observation()
+        batch.observe(
+            obs, F.count(F.lit(1)).alias("rows"), F.max("change_seq").alias("pos")
+        ).write.mode("overwrite").parquet(stage)
+        observed = obs.get
+        if not observed["rows"]:
+            shutil.rmtree(stage)
+            return False
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(stage, final)
-        with open(self.manifest_path, "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "topic": self.topic,
-                        "kind": "change_rows",
-                        "position": position,
-                        "batch_id": batch_id,
-                    }
-                )
-                + "\n"
-            )
+        self._append(
+            {
+                "topic": self.topic,
+                "kind": "change_rows",
+                "position": observed["pos"] if position is None else position,
+                "batch_id": batch_id,
+            }
+        )
         return True
 
     def progress_entries(self) -> list[ProgressEntry]:
@@ -149,24 +179,19 @@ class TransactionalDirSink:
         if not existing:
             return 0
         next_id = max(r["batch_id"] for r in self.committed_batches().values()) + 1
-        n = 0
-        with open(self.manifest_path, "a") as f:
-            for kind in kinds:
-                if any(r["kind"] == kind for r in existing):
-                    f.write(
-                        json.dumps(
-                            {
-                                "topic": self.topic,
-                                "kind": kind,
-                                "position": None,
-                                "batch_id": next_id + n,
-                                "tombstone": True,
-                            }
-                        )
-                        + "\n"
-                    )
-                    n += 1
-        return n
+        present = [k for k in kinds if any(r["kind"] == k for r in existing)]
+        tombs = [
+            {
+                "topic": self.topic,
+                "kind": kind,
+                "position": None,
+                "batch_id": next_id + n,
+                "tombstone": True,
+            }
+            for n, kind in enumerate(present)
+        ]
+        self._append(*tombs)
+        return len(tombs)
 
     def read_committed(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
         """Read ONLY manifest-listed data (uncommitted staging invisible).
