@@ -8,52 +8,49 @@ transaction, and emits delete tombstones. Spark-first restatement:
 - **source** (T1/T3): a micro-batch over the change feed. In production this
   is ``readStream`` against Kafka/Delta-CDF; for a keyset-polled JDBC source
   the same batching happens in ``foreachBatch`` pull mode — each trigger
-  issues the S1 window scan from the last offset, bounded by
+  issues the S1 window scan from the last committed position, bounded by
   ``max_rows_per_trigger`` (the reference's lagging-table backpressure:
   a full batch means "still behind, poll again immediately").
-- **frontier** (T4): per-feed max index; emission bounded by min(frontiers).
-- **sink** (T2/T6): ``foreachBatch`` writes data + a keyed progress record
-  atomically with the batch id — Spark's checkpoint gives resume; the
-  explicit progress table mirrors the reference's compacted progress topic
-  for parity and auditability.
+- **progress** (T2): the sink's manifest is the only progress state, as the
+  compacted progress topic is the reference's (progress_tracking.py:235-258).
+  A trigger reads its start position and its batch id from the manifest and
+  commits data and new position together, so a batcher that starts on a
+  sink — after a clean stop or a crash — picks up where the last commit
+  left off.
 - **order** (O1/O2): within a micro-batch, emission is ordered by the change
   index (repartitionByRange + sortWithinPartitions at scale).
 
 This module implements the pieces as composable functions plus a
-MicroBatcher that drives them over a static feed for tests — the pull-mode
-shape. The same functions are wired to ``readStream`` sources unchanged.
+MicroBatcher that drives them over a static feed — the pull-mode shape.
+The same functions are wired to ``readStream`` sources unchanged.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.model.envelope import OP_DELETE
+from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 
-MIN_POLL_INTERVAL_S = 3  # constants.py:6
-MAX_POLL_INTERVAL_S = 10  # constants.py:7
 DEFAULT_BATCH_SIZE = 2000  # options.py:282-285
 
 
 def poll_window(
     feed: DataFrame,
     after,
-    up_to,
     idx_col: str = "change_seq",
     max_rows: int = DEFAULT_BATCH_SIZE,
 ) -> DataFrame:
     """One trigger's pull (S1 as a micro-batch): rows strictly after the
-    stored offset, at most the frontier, capped at max_rows in index order —
-    ``maxOffsetsPerTrigger`` semantics (T3)."""
-    return (
-        feed.filter((F.col(idx_col) > F.lit(after)) & (F.col(idx_col) <= F.lit(up_to)))
-        .orderBy(idx_col)
-        .limit(max_rows)
-    )
+    committed position (all rows when ``after`` is None), capped at
+    max_rows in index order — ``maxOffsetsPerTrigger`` semantics (T3)."""
+    if after is not None:
+        feed = feed.filter(F.col(idx_col) > F.lit(after))
+    return feed.orderBy(idx_col).limit(max_rows)
 
 
 def with_tombstones(
@@ -61,77 +58,54 @@ def with_tombstones(
 ) -> DataFrame:
     """T6: append a (key, null-payload) companion row after every Delete.
     Tombstones sort directly after their delete event (same index, higher
-    emission order) so compaction applies them last."""
+    emission order) so compaction applies them last. One pass over
+    ``batch``: each delete row is exploded into itself and its tombstone,
+    so an uncached batch is evaluated once."""
     payload = [c for c in batch.columns if c not in key_cols and c != op_col]
-    tombs = batch.filter(F.col(op_col) == OP_DELETE).select(
-        F.col(op_col),
-        *key_cols,
-        *[F.lit(None).cast(batch.schema[c].dataType).alias(c) for c in payload],
-        F.lit(True).alias("__tombstone"),
+    tomb = F.when(F.col(op_col) == OP_DELETE, F.array(F.lit(False), F.lit(True)))
+    out = batch.withColumn(
+        "__tombstone", F.explode(F.coalesce(tomb, F.array(F.lit(False))))
     )
-    return batch.withColumn("__tombstone", F.lit(False)).unionByName(tombs)
-
-
-@dataclass
-class ProgressEntry:
-    """Mirror of the reference's ProgressEntry (progress_tracking.py:19-87):
-    keyed (topic, kind) -> last index or snapshot key."""
-
-    topic: str
-    kind: str  # 'change_rows' | 'snapshot_rows' (constants.py:38-39)
-    position: object
-    batch_id: int
+    return out.select(
+        *[
+            F.when(~F.col("__tombstone"), F.col(c)).alias(c) if c in payload else c
+            for c in batch.columns
+        ],
+        "__tombstone",
+    )
 
 
 @dataclass
 class MicroBatcher:
-    """Pull-mode micro-batch driver over a bounded feed — the test harness
-    for the streaming semantics (and the shape of a foreachBatch JDBC
-    puller). Tracks per-topic progress exactly-once-style: progress is
-    recorded with the batch id; replaying a batch id is idempotent
-    (main.py:319-350's transaction, restated)."""
+    """Pull-mode micro-batch driver over a bounded feed (the shape of a
+    foreachBatch JDBC puller). It keeps no progress of its own: each trigger
+    polls after the sink's last committed position and commits under the id
+    after the highest one in the sink's manifest — data and progress in one
+    commit, as in the reference's transaction (main.py:319-350)."""
 
     feed: DataFrame
-    topic: str
+    sink: TransactionalDirSink
     idx_col: str = "change_seq"
     batch_size: int = DEFAULT_BATCH_SIZE
-    sink: Callable[[DataFrame, int], None] | None = None
-    progress_log: list[ProgressEntry] = field(default_factory=list)
-    _offset: object = None
-    _batch_id: int = 0
+    # commits (batch, batch_id) to ``sink`` and says whether it did;
+    # ``sink.commit_batch`` when None
+    commit: Callable[[DataFrame, int], bool] | None = None
 
-    def last_offset(self):
-        return self._offset
-
-    def run_once(self, frontier=None) -> int:
-        """One trigger: poll → emit → record progress. Returns emitted rows.
-        A full batch (== batch_size) signals a lagging table: the caller
-        should immediately re-trigger (T3) instead of waiting the poll
-        interval."""
-        if frontier is None:
-            frontier = self.feed.agg(F.max(self.idx_col)).collect()[0][0]
-        after = self._offset if self._offset is not None else -1
+    def run_once(self) -> int:
+        """One trigger: poll → commit. Returns the rows polled, 0 when the
+        feed holds nothing past the committed position. A full batch (==
+        batch_size) signals a lagging table: the caller should immediately
+        re-trigger (T3) instead of waiting the poll interval. The rows are
+        counted by an Observation on the commit's own write, so polling
+        costs no job of its own."""
+        obs = Observation()
         batch = poll_window(
-            self.feed, after, frontier, self.idx_col, self.batch_size
-        ).cache()
-        try:
-            rows, new_offset = batch.agg(
-                F.count(F.lit(1)), F.max(self.idx_col)
-            ).collect()[0]
-            if rows == 0:
-                return 0
-            if self.sink is not None:
-                self.sink(batch, self._batch_id)
-            # data + progress recorded together per batch id (T2): replaying
-            # this batch id after a crash overwrites, never duplicates.
-            self.progress_log.append(
-                ProgressEntry(self.topic, "change_rows", new_offset, self._batch_id)
-            )
-            self._offset = new_offset
-            self._batch_id += 1
-            return rows
-        finally:
-            batch.unpersist()
+            self.feed, self.sink.last_progress(), self.idx_col, self.batch_size
+        ).observe(obs, F.count(F.lit(1)).alias("rows"))
+        commit = self.commit or self.sink.commit_batch
+        if not commit(batch, self.sink.next_batch_id()):
+            return 0
+        return obs.get["rows"]
 
     def run_to_completion(self, max_batches: int = 10_000) -> int:
         total = 0
@@ -141,13 +115,3 @@ class MicroBatcher:
             if n < self.batch_size:
                 break
         return total
-
-
-def resume_offset(progress_log: Sequence[ProgressEntry], topic: str):
-    """T2 resume: last-value-per-key replay of the progress log (the
-    compacted-progress-topic read, progress_tracking.py:235-258)."""
-    last = None
-    for e in progress_log:
-        if e.topic == topic and e.kind == "change_rows":
-            last = e.position
-    return last

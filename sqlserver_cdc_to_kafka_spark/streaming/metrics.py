@@ -83,12 +83,17 @@ class AccumulatingReporter(ReporterBase):
 def observed_batch(batch: DataFrame, op_col: str = "__operation", idx_col: str = "change_seq"):
     """Attach an Observation computing the interval counters INSIDE the
     batch's own job — the accumulator (accumulator.py:93-181) without a
-    second scan. Returns (observed_df, observation)."""
+    second scan. ``rows`` counts tombstones (T6); ``deletes`` does not —
+    a tombstone keeps its delete's operation. Returns (observed_df,
+    observation)."""
+    is_delete = F.col(op_col) == 1
+    if "__tombstone" in batch.columns:
+        is_delete &= ~F.col("__tombstone")
     obs = Observation()
     observed = batch.observe(
         obs,
         F.count(F.lit(1)).alias("rows"),
-        F.count_if(F.col(op_col) == 1).alias("deletes"),
+        F.count_if(is_delete).alias("deletes"),
         F.count_if(F.col(op_col) == 2).alias("inserts"),
         F.count_if(F.col(op_col) == 4).alias("updates"),
         F.count_if(F.col(op_col) == 0).alias("snapshots"),

@@ -7,6 +7,11 @@ tombstones appended after deletes (T6) → batch + progress committed together
 self-validation over the engine's own committed output (§5's validators as
 product).
 
+The sink's manifest is the run's only progress state: a run reads its
+snapshot resume key, its change position and each commit's batch id from
+it, so a run that crashed resumes where its last commit left off and a run
+over a finished sink commits nothing.
+
 This is pull-mode (bounded feeds) — the test harness shape; the same
 composition drives ``readStream`` sources unchanged."""
 
@@ -43,28 +48,33 @@ class PipelineRun:
     sink: TransactionalDirSink
     reporters: list[ReporterBase] = field(default_factory=list)
     batch_size: int = 2000
-    batches_committed: int = 0
     rows_committed: int = 0
 
     def run(self) -> int:
         """Interleave snapshot pages with change micro-batches, as the
         reference fills the gap between CDC polls with snapshot work
-        (main.py:214-267). Returns total rows committed (snapshot rows +
-        change rows + tombstones)."""
-        snap = SnapshotStream(self.source_table, self.key_cols, self.batch_size)
+        (main.py:214-267), resuming from the sink's manifest. Returns total
+        rows committed (snapshot rows + change rows + tombstones)."""
+        snap = SnapshotStream(
+            self.source_table,
+            self.key_cols,
+            self.batch_size,
+            last_key=self.sink.last_progress(field="snapshot_key"),
+        )
         mb = MicroBatcher(
             self.change_feed,
-            self.sink.topic,
+            self.sink,
             batch_size=self.batch_size,
-            sink=self._commit_changes,
+            commit=self._commit_changes,
         )
-        resume = self.sink.last_progress()
-        if resume is not None:
-            mb._offset = resume
         while True:
             page = snap.next_page()
             if page is not None:
-                self._commit(self._snapshot_envelope(page), None)
+                self._commit(
+                    self._snapshot_envelope(page),
+                    self.sink.next_batch_id(),
+                    snapshot_key=snap.last_key,
+                )
                 page.unpersist()
             emitted = mb.run_once()
             if snap.completed and emitted < self.batch_size:
@@ -85,18 +95,17 @@ class PipelineRun:
                     out = out.withColumn(c, F.lit(None).cast(dt))
         return out.select(*cols).withColumn("__tombstone", F.lit(False))
 
-    def _commit_changes(self, batch: DataFrame, batch_id: int) -> None:
-        self._commit(with_tombstones(batch, self.key_cols), batch_id)
+    def _commit_changes(self, batch: DataFrame, batch_id: int) -> bool:
+        return self._commit(with_tombstones(batch, self.key_cols), batch_id) > 0
 
-    def _commit(self, batch: DataFrame, _batch_id) -> int:
+    def _commit(self, batch: DataFrame, batch_id: int, snapshot_key=None) -> int:
         observed, obs = observed_batch(batch)
         t0 = time.time()
         # one job: the write fulfils both the metrics Observation and the
         # sink's, which supplies the manifest position
-        if not self.sink.commit_batch(observed, self.batches_committed):
+        if not self.sink.commit_batch(observed, batch_id, snapshot_key=snapshot_key):
             return 0
-        m = report_batch(obs.get, self.batches_committed, time.time() - t0, self.reporters)
-        self.batches_committed += 1
+        m = report_batch(obs.get, batch_id, time.time() - t0, self.reporters)
         self.rows_committed += m.rows
         return m.rows
 

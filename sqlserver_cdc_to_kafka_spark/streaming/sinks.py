@@ -4,11 +4,12 @@
 Reference behavior: every micro-batch's data messages AND per-topic progress
 records are produced inside ONE Kafka transaction (``main.py:319-350``,
 ``kafka.py:134-156``) — a crash never leaves data without progress or
-vice versa. Spark's Kafka sink alone is at-least-once, so the idiomatic
-restatement is ``foreachBatch`` + an idempotent, batch-id-keyed commit
-protocol — which is exactly what Structured Streaming's own file sink does
-with its manifest log, generalized here so any directory-backed format gets
-it.
+vice versa — and a restart resumes from the progress topic alone
+(``progress_tracking.py:235-258``). Spark's Kafka sink alone is
+at-least-once, so the idiomatic restatement is ``foreachBatch`` + an
+idempotent, batch-id-keyed commit protocol — which is exactly what
+Structured Streaming's own file sink does with its manifest log,
+generalized here so any directory-backed format gets it.
 
 ``TransactionalDirSink`` implements that protocol without external
 dependencies (no Kafka broker in this environment; swapping ``_write_files``
@@ -20,12 +21,18 @@ for a transactional producer keyed by batch id gives the Kafka version):
 2. if the write observed no rows, drop the stage directory and commit
    nothing; otherwise atomically rename it into place;
 3. append the progress record ``(topic, kind, position, batch_id)`` to the
-   manifest, the position being the observed ``max(change_seq)`` — readers
-   only see directories listed in the manifest, so a crash between 2 and 3
-   is invisible and a replay of the same batch id is idempotent (stage dir
-   overwritten, manifest append deduped by batch id). A record commits
-   with its line's newline: an append a crash cut short leaves a torn last
-   line, which readers skip and the next append cuts off.
+   manifest and fsync it, the position being the observed
+   ``max(change_seq)`` — readers only see directories listed in the
+   manifest, so a crash between 2 and 3 is invisible and a replay of the
+   same batch id is idempotent (stage dir overwritten, manifest append
+   deduped by batch id). A record commits with its line's newline: an
+   append a crash cut short leaves a torn last line, which readers skip
+   and the next append cuts off.
+
+The manifest is the pull-mode pipeline's only progress state: the change
+position (``last_progress``), the snapshot resume key (a snapshot page's
+``snapshot_key`` field) and the next batch id (``next_batch_id``) are all
+read back from it, so a run that starts on an existing sink resumes there.
 """
 
 from __future__ import annotations
@@ -37,8 +44,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-from sqlserver_cdc_to_kafka_spark.streaming.change_feed import ProgressEntry
 
 
 @dataclass
@@ -71,12 +76,14 @@ class TransactionalDirSink:
         return [json.loads(line) for line in committed.splitlines()]
 
     def _append(self, *records: dict) -> None:
-        """Append manifest records, first cutting off a torn last line (see
-        ``_records``) so the new records never fuse with it."""
+        """Append manifest records durably, first cutting off a torn last
+        line (see ``_records``) so the new records never fuse with it."""
         with open(self.manifest_path, "a+b") as f:
             f.seek(0)
             f.truncate(f.read().rfind(b"\n") + 1)
             f.write(b"".join(json.dumps(r).encode() + b"\n" for r in records))
+            f.flush()
+            os.fsync(f.fileno())
 
     def committed_batches(self) -> dict[int, dict]:
         out: dict[int, dict] = {}
@@ -84,22 +91,30 @@ class TransactionalDirSink:
             out[rec["batch_id"]] = rec  # last write wins (replay supersedes)
         return out
 
-    def last_progress(self, kind: str = "change_rows"):
-        """T2 resume point: last committed position FOR THIS KIND (the
-        compacted-progress-topic replay, progress_tracking.py:235-258).
-        Batches without a position (snapshot pages) are skipped — snapshot
-        progress is tracked by key, not index (constants.py:38-39). A reset
-        tombstone (see ``reset_progress``) is a hard boundary for ITS kind
-        only: a reset scoped to snapshot_rows must not wipe the change_rows
-        resume point (per-(topic, kind) progress, like the reference)."""
+    def next_batch_id(self) -> int:
+        """The id after the highest one in the manifest, reset tombstones
+        included — the next pull-mode commit's id (0 on an empty sink)."""
+        return max((r["batch_id"] for r in self._records()), default=-1) + 1
+
+    def last_progress(self, kind: str = "change_rows", field: str = "position"):
+        """T2 resume point: the last committed value of ``field`` FOR THIS
+        KIND (the compacted-progress-topic replay,
+        progress_tracking.py:235-258). ``position`` is the change index;
+        ``snapshot_key`` is the last key a snapshot page committed. Records
+        where the field is null (a snapshot page's position, a change
+        batch's key) are skipped. A reset tombstone (see
+        ``reset_progress``) is a hard boundary for ITS kind only: a reset
+        scoped to snapshot_rows must not wipe the change_rows resume point
+        (per-(topic, kind) progress, like the reference). Snapshot pages
+        commit as change_rows, so a change_rows reset re-snapshots too."""
         resume = None
         for rec in self._records():
             if rec.get("kind") != kind:
                 continue
             if rec.get("tombstone"):
                 resume = None  # epoch boundary: nothing before it counts
-            elif rec["position"] is not None:
-                resume = rec["position"]
+            elif rec.get(field) is not None:
+                resume = rec[field]
         return resume
 
     def _current_epoch_batch_ids(self, kind: str = "change_rows") -> set[int]:
@@ -119,7 +134,7 @@ class TransactionalDirSink:
         return ids
 
     def commit_batch(
-        self, batch: DataFrame, batch_id: int, position=None
+        self, batch: DataFrame, batch_id: int, position=None, snapshot_key=None
     ) -> bool:
         """Idempotent commit in one Spark job: returns False (no-op) if this
         batch id is already committed in the current epoch — the
@@ -129,7 +144,9 @@ class TransactionalDirSink:
         on the write itself: ``count(1)`` and ``max(change_seq)``, so no
         separate job scans the batch. Snapshot pages (all-null
         ``change_seq``) record ``None``. A non-None ``position`` overrides
-        the observed one.
+        the observed one. A snapshot page passes the last key it read as
+        ``snapshot_key``; the record keeps it in a field of its own, so a
+        restart pages on below it (``last_progress(field="snapshot_key")``).
 
         A replay of a pre-reset batch id is NOT a duplicate: it overwrites
         the old data directory and its manifest record supersedes the old
@@ -157,15 +174,10 @@ class TransactionalDirSink:
                 "kind": "change_rows",
                 "position": observed["pos"] if position is None else position,
                 "batch_id": batch_id,
+                "snapshot_key": snapshot_key,
             }
         )
         return True
-
-    def progress_entries(self) -> list[ProgressEntry]:
-        return [
-            ProgressEntry(r["topic"], r["kind"], r["position"], r["batch_id"])
-            for r in self.committed_batches().values()
-        ]
 
     def reset_progress(self, kinds: tuple[str, ...] = ("change_rows",)) -> int:
         """progress_reset_tool analog (reference progress_reset_tool.py:12,
@@ -178,7 +190,7 @@ class TransactionalDirSink:
         existing = [r for r in self.committed_batches().values() if r["kind"] in kinds]
         if not existing:
             return 0
-        next_id = max(r["batch_id"] for r in self.committed_batches().values()) + 1
+        next_id = self.next_batch_id()
         present = [k for k in kinds if any(r["kind"] == k for r in existing)]
         tombs = [
             {
@@ -226,7 +238,8 @@ class TransactionalDirSink:
         atomically replace the batch directories with one compacted batch.
 
         Progress is preserved: the compacted batch takes the max committed
-        batch id and position, so resume semantics are unchanged. Returns
+        batch id, position and snapshot key, so resume semantics are
+        unchanged — a rerun after compaction commits nothing. Returns
         surviving row count. At scale this is the same one-shuffle
         ``max_by`` with the output range-partitioned by key."""
         from sqlserver_cdc_to_kafka_spark.operators.compaction import (
@@ -252,7 +265,9 @@ class TransactionalDirSink:
         live = last.filter(~F.col(tombstone_col)).drop("__ordk")
 
         max_id = max(batches)
-        position = self.last_progress()  # capture BEFORE rewriting manifest
+        # capture progress BEFORE rewriting the manifest
+        position = self.last_progress()
+        snapshot_key = self.last_progress(field="snapshot_key")
         # crash-safe ordering: (1) write the compacted generation under a
         # fresh directory name, (2) atomically replace the manifest — THE
         # commit point: readers switch from the old dirs to the new one in
@@ -278,10 +293,13 @@ class TransactionalDirSink:
                         "position": position,
                         "batch_id": max_id,
                         "path": gen_dir,
+                        "snapshot_key": snapshot_key,
                     }
                 )
                 + "\n"
             )
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp_manifest, self.manifest_path)  # commit point
         for b, rec in batches.items():
             d = os.path.join(self.root, "data", rec.get("path", f"batch={b}"))

@@ -13,7 +13,8 @@ foreachBatch shape)."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from collections.abc import Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -30,9 +31,8 @@ class SnapshotStream:
     source: DataFrame
     key_cols: list[str]
     batch_size: int = 2000
-    last_key: tuple | None = None
+    last_key: Sequence | None = None
     completed: bool = False
-    pages_emitted: int = field(default=0)
 
     def next_page(self) -> DataFrame | None:
         """None once the table is exhausted (snapshot-completed sentinel,
@@ -57,7 +57,6 @@ class SnapshotStream:
             self.completed = True
             return None
         self.last_key = tuple(summary["low_key"][c] for c in self.key_cols)
-        self.pages_emitted += 1
         if summary["n"] < self.batch_size:
             self.completed = True
         return page

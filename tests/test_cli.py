@@ -100,11 +100,7 @@ def test_reset_progress_tool(spark, sf_dir, tmp_path, capsys):
     for topic in ("orders_cdc", "customer_cdc"):
         sink = TransactionalDirSink(str(tmp_path / topic), topic)
         sinks[topic] = sink
-
-        def write(batch, bid, s=sink):
-            s.commit_batch(batch, bid, batch.agg(F.max("change_seq")).collect()[0][0])
-
-        MicroBatcher(feed, topic, batch_size=700, sink=write).run_to_completion()
+        MicroBatcher(feed, sink, batch_size=700).run_to_completion()
     max_seq = feed.agg(F.max("change_seq")).collect()[0][0]
     assert sinks["orders_cdc"].last_progress() == max_seq
 
@@ -129,8 +125,7 @@ def test_reset_progress_tool(spark, sf_dir, tmp_path, capsys):
     # committed data is untouched (only progress is rewritten)
     assert sinks["orders_cdc"].read_committed(spark).count() == feed.count()
     # a fresh batcher over the reset topic starts from scratch
-    mb = MicroBatcher(feed, "orders_cdc", batch_size=700)
-    mb._offset = sinks["orders_cdc"].last_progress()
+    mb = MicroBatcher(feed, sinks["orders_cdc"], batch_size=700)
     assert mb.run_once() == 700
 
 

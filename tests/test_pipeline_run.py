@@ -4,6 +4,11 @@ committed output with the engine's own validators (§5 as product)."""
 
 from __future__ import annotations
 
+import json
+import os
+from collections import Counter
+
+import pytest
 from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.fixtures.cdc_events import cdc_events
@@ -25,6 +30,33 @@ def _setup(spark, sf_dir, tmp_path, batch_size=700):
         spark, orders, feed, ["o_orderkey"], sink, [rep], batch_size=batch_size
     )
     return orders, feed, sink, rep, run
+
+
+class Crash(Exception):
+    """Stands in for the process dying at the point it is raised."""
+
+
+def _crash_after_commit(sink, k):
+    """Crash right after the sink's k-th commit returns."""
+    commit, done = sink.commit_batch, []
+
+    def commit_batch(*args, **kwargs):
+        ok = commit(*args, **kwargs)
+        done.append(ok)
+        if done.count(True) == k:
+            raise Crash
+        return ok
+
+    sink.commit_batch = commit_batch
+
+
+def _committed_rows(spark, sink) -> Counter:
+    return Counter(map(repr, sink.read_committed(spark).collect()))
+
+
+def _manifest_ids(sink) -> list[int]:
+    with open(sink.manifest_path) as f:
+        return [json.loads(line)["batch_id"] for line in f]
 
 
 def test_pipeline_end_to_end_with_self_validation(spark, sf_dir, tmp_path):
@@ -70,25 +102,108 @@ def test_pipeline_end_to_end_with_self_validation(spark, sf_dir, tmp_path):
     gone = live.filter(F.col("__tombstone"))
     assert gone.count() == feed.filter(F.col("__operation") == OP_DELETE).count()
 
-    # --- metrics reported for every committed batch
-    assert len(rep.emitted) == run.batches_committed
+    # --- metrics reported for every committed batch; tombstones are rows
+    # but not deletes
+    assert [m.batch_id for m in rep.emitted] == sorted(sink.committed_batches())
     assert sum(m.rows for m in rep.emitted) == total
+    assert sum(m.deletes for m in rep.emitted) == n_deletes
 
 
 def test_pipeline_resume_after_crash(spark, sf_dir, tmp_path):
+    """A run that dies after its second commit resumes from the manifest:
+    the rerun commits and reports exactly the rows the crash left out, and
+    a run over the finished sink commits nothing."""
     orders, feed, sink, rep, run = _setup(spark, sf_dir, tmp_path, batch_size=500)
-    total_first = run.run()
+    n_deletes = feed.filter(F.col("__operation") == OP_DELETE).count()
+    n_total = orders.count() + feed.count() + n_deletes
+    _crash_after_commit(sink, 2)
+    with pytest.raises(Crash):
+        run.run()
+    before = sink.read_committed(spark).count()
+    assert 0 < before < n_total
 
-    # "restart": a new PipelineRun against the same sink must commit NOTHING
-    # new for changes (progress replay) — only the snapshot re-pages (the
-    # reference re-snapshots only on instance change; our harness always
-    # pages, so count only change rows).
-    orders2, feed2, sink2, rep2, run2 = _setup(spark, sf_dir, tmp_path, batch_size=500)
+    _, _, sink2, rep2, run2 = _setup(spark, sf_dir, tmp_path, batch_size=500)
+    assert run2.run() == n_total - before
+    assert sink2.read_committed(spark).count() == n_total
+    assert sum(m.rows for m in rep2.emitted) == n_total - before
+    assert [m.batch_id for m in rep2.emitted] == sorted(sink2.committed_batches())[2:]
+
+    _, _, sink3, rep3, run3 = _setup(spark, sf_dir, tmp_path, batch_size=500)
+    assert run3.run() == 0
+    assert rep3.emitted == []
+    assert sink3.read_committed(spark).count() == n_total
+
+
+CRASH_POINTS = range(1, 7)
+
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, sf_dir, tmp_path_factory):
+    """The committed rows of a run that is never interrupted (batch 700)."""
+    _, _, sink, _, run = _setup(spark, sf_dir, tmp_path_factory.mktemp("whole"))
+    run.run()
+    # 3 snapshot pages and 3 change batches at sf0.001: CRASH_POINTS covers
+    # a crash after every commit
+    assert len(sink.committed_batches()) == len(CRASH_POINTS)
+    return _committed_rows(spark, sink)
+
+
+@pytest.mark.parametrize("k", CRASH_POINTS)
+def test_crash_after_commit_k_resumes_exactly_once(
+    spark, sf_dir, tmp_path, uninterrupted, k
+):
+    _, _, sink, _, run = _setup(spark, sf_dir, tmp_path)
+    _crash_after_commit(sink, k)
+    with pytest.raises(Crash):
+        run.run()
+    assert len(_manifest_ids(sink)) == k
+
+    _, _, sink2, _, run2 = _setup(spark, sf_dir, tmp_path)
     run2.run()
-    change_rows_second = sum(
-        m.rows for m in rep2.emitted if m.snapshots == 0 and m.rows > 0
-    )
-    assert change_rows_second == 0  # no change row re-emitted after resume
+    assert _committed_rows(spark, sink2) == uninterrupted
+    ids = _manifest_ids(sink2)
+    assert len(ids) == len(set(ids)) == len(CRASH_POINTS)
+
+
+@pytest.mark.parametrize("n", [2, 3], ids=["change_batch", "snapshot_page"])
+def test_crash_between_data_rename_and_manifest_append(
+    spark, sf_dir, tmp_path, uninterrupted, n
+):
+    """The n-th commit dies after its data directory is renamed into place
+    but before its manifest record is appended: the directory is invisible,
+    and the resumed run commits the same batch id over it."""
+    _, _, sink, _, run = _setup(spark, sf_dir, tmp_path)
+    append, calls = sink._append, []
+
+    def torn_append(*records):
+        calls.append(records)
+        if len(calls) == n:
+            raise Crash
+        append(*records)
+
+    sink._append = torn_append
+    with pytest.raises(Crash):
+        run.run()
+    assert _manifest_ids(sink) == list(range(n - 1))
+    assert os.path.isdir(tmp_path / "out" / "data" / f"batch={n - 1}")
+
+    _, _, sink2, _, run2 = _setup(spark, sf_dir, tmp_path)
+    run2.run()
+    assert _committed_rows(spark, sink2) == uninterrupted
+    ids = _manifest_ids(sink2)
+    assert len(ids) == len(set(ids)) == len(CRASH_POINTS)
+
+
+def test_rerun_after_compaction_commits_nothing(spark, sf_dir, tmp_path):
+    """compact() keeps the change position and the snapshot key, so a rerun
+    over the compacted sink neither re-snapshots nor re-tails."""
+    _, _, sink, _, run = _setup(spark, sf_dir, tmp_path)
+    run.run()
+    n_live = sink.compact(spark, ["o_orderkey"])
+    _, _, sink2, rep2, run2 = _setup(spark, sf_dir, tmp_path)
+    assert run2.run() == 0
+    assert rep2.emitted == []
+    assert sink2.read_committed(spark).count() == n_live
 
 
 def test_sink_log_compaction(spark, sf_dir, tmp_path):

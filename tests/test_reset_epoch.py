@@ -1,9 +1,10 @@
 """Round-6 ADVICE fixes: tombstone epochs and kind-scoped resets.
 
 1. A tombstone written by ``TransactionalDirSink.reset_progress`` must start
-   a real batch-id epoch: a from-scratch rerun restarts at batch_id 0, and
-   ``commit_batch`` must accept the re-ingested batches instead of silently
-   dropping them against pre-reset manifest ids (the data-loss scenario the
+   a real batch-id epoch: a from-scratch rerun whose ids restart at 0 (a
+   Spark checkpoint reset alongside the progress reset) must have its
+   re-ingested batches accepted by ``commit_batch`` instead of silently
+   dropped against pre-reset manifest ids (the data-loss scenario the
    round-5 test avoided by re-running without a sink attached).
 
 2. ``last_progress`` must treat a tombstone as a resume boundary only for
@@ -14,6 +15,7 @@
 
 from __future__ import annotations
 
+import itertools
 import json
 
 import pyspark.sql.functions as F
@@ -23,14 +25,15 @@ from sqlserver_cdc_to_kafka_spark.streaming.change_feed import MicroBatcher
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 
 
-def _run_batcher(feed, sink, topic):
-    def write(batch, bid):
-        sink.commit_batch(
-            batch, bid, batch.agg(F.max("change_seq")).collect()[0][0]
-        )
-
-    mb = MicroBatcher(feed, topic, batch_size=700, sink=write)
-    mb._offset = sink.last_progress()
+def _run_batcher(feed, sink):
+    """Drain ``feed`` into ``sink`` under explicit batch ids 0, 1, ... — the
+    ids a fresh Spark checkpoint hands ``foreachBatch`` — instead of the
+    manifest's next ids."""
+    ids = itertools.count()
+    mb = MicroBatcher(
+        feed, sink, batch_size=700,
+        commit=lambda batch, _bid: sink.commit_batch(batch, next(ids)),
+    )
     return mb.run_to_completion()
 
 
@@ -42,17 +45,19 @@ def test_sink_attached_rerun_after_reset_reingests_everything(
     max_seq = feed.agg(F.max("change_seq")).collect()[0][0]
     sink = TransactionalDirSink(str(tmp_path / "t"), "t")
 
-    assert _run_batcher(feed, sink, "t") == n_feed
+    assert _run_batcher(feed, sink) == n_feed
     assert sink.last_progress() == max_seq
+    ids = sorted(sink.committed_batches())
 
     assert sink.reset_progress() == 1
     assert sink.last_progress() is None
 
     # the critical path: a SINK-ATTACHED rerun from scratch. Its batches
-    # restart at batch_id 0; every one must commit (not be dropped as a
-    # pre-reset duplicate), and the resume point must advance past the
-    # tombstone to the re-ingested position.
-    assert _run_batcher(feed, sink, "t") == n_feed
+    # restart at batch_id 0, below the tombstone's id; every one must
+    # commit (not be dropped as a pre-reset duplicate), and the resume
+    # point must advance past the tombstone to the re-ingested position.
+    assert _run_batcher(feed, sink) == n_feed
+    assert sorted(sink.committed_batches()) == ids + [len(ids)]
     assert sink.last_progress() == max_seq
     # the re-ingested batches supersede the pre-reset ones: the table holds
     # the corpus exactly once
@@ -68,7 +73,7 @@ def test_tombstone_only_bounds_its_own_kind(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 2000)
     max_seq = feed.agg(F.max("change_seq")).collect()[0][0]
     sink = TransactionalDirSink(str(tmp_path / "t"), "t")
-    _run_batcher(feed, sink, "t")
+    _run_batcher(feed, sink)
 
     # hand-write a snapshot_rows record then reset ONLY snapshot_rows
     with open(sink.manifest_path, "a") as f:

@@ -155,3 +155,34 @@ def test_malformed_manifest_line_before_the_last_raises(tmp_path):
     _write_manifest(sink, _rec(0, 10) + "{not json\n" + _rec(2, 30))
     with pytest.raises(ValueError):
         sink.last_progress()
+
+
+def test_manifest_writes_are_fsynced(spark, sf_dir, tmp_path, monkeypatch):
+    """A commit's manifest append and compaction's new manifest reach the
+    disk before the call returns (append) or the rename commits (compact)."""
+    events = []
+    fsync, replace = os.fsync, os.replace
+
+    def spy_fsync(fd):
+        st = os.fstat(fd)
+        events.append(("fsync", st.st_ino, st.st_size))
+        fsync(fd)
+
+    def spy_replace(src, dst):
+        events.append(("replace", os.stat(src).st_ino, dst))
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "replace", spy_replace)
+    feed = cdc_events(spark, sf_dir).withColumn("__tombstone", F.lit(False))
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    assert sink.commit_batch(feed.filter(F.col("change_seq") < 100), 0)
+    st = os.stat(sink.manifest_path)
+    assert events[-1] == ("fsync", st.st_ino, st.st_size)
+
+    events.clear()
+    sink.compact(spark, ["o_orderkey"])
+    ino = os.stat(sink.manifest_path).st_ino
+    assert events.index(("replace", ino, sink.manifest_path)) > events.index(
+        ("fsync", ino, os.stat(sink.manifest_path).st_size)
+    )

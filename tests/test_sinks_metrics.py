@@ -30,8 +30,9 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
     def write(batch, batch_id):
         pos = batch.agg(F.max("change_seq")).collect()[0][0]
         assert sink.commit_batch(batch, batch_id, pos)
+        return True
 
-    mb = MicroBatcher(feed, "orders", batch_size=400, sink=write)
+    mb = MicroBatcher(feed, sink, batch_size=400, commit=write)
     total = mb.run_to_completion()
     assert total == n_feed
 
@@ -47,11 +48,10 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
     assert not sink.commit_batch(some_batch, 0, position=-1)
     assert sink.read_committed(spark).count() == n_feed
 
-    # resume point = max committed index; a new batcher starting there sees 0
+    # resume point = max committed index; a new batcher on the sink sees 0
     resume = sink.last_progress()
     assert resume == feed.agg(F.max("change_seq")).collect()[0][0]
-    mb2 = MicroBatcher(feed, "orders", batch_size=400)
-    mb2._offset = resume
+    mb2 = MicroBatcher(feed, sink, batch_size=400)
     assert mb2.run_once() == 0
 
 
@@ -218,11 +218,7 @@ def test_streaming_query_listener_captures_progress(spark, sf_dir, tmp_path):
 def test_time_travel_read(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 3000)
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
-    mb = MicroBatcher(
-        feed, "orders", batch_size=400,
-        sink=lambda b, i: sink.commit_batch(b, i, b.agg(F.max("change_seq")).collect()[0][0]),
-    )
-    mb.run_to_completion()
+    MicroBatcher(feed, sink, batch_size=400).run_to_completion()
     n_all = sink.read_committed(spark).count()
     n_b0 = sink.read_committed(spark, as_of=0).count()
     n_b1 = sink.read_committed(spark, as_of=1).count()

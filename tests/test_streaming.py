@@ -10,9 +10,9 @@ from sqlserver_cdc_to_kafka_spark.fixtures.cdc_events import cdc_events
 from sqlserver_cdc_to_kafka_spark.functions.datetime_fns import as_event_time
 from sqlserver_cdc_to_kafka_spark.streaming.change_feed import (
     MicroBatcher,
-    resume_offset,
     with_tombstones,
 )
+from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import (
     SnapshotStream,
     unified_feed,
@@ -26,26 +26,27 @@ from sqlserver_cdc_to_kafka_spark.streaming.windows import (
 from sqlserver_cdc_to_kafka_spark.tables import load_table
 
 
-def test_microbatcher_exactly_once_progress_and_resume(spark, sf_dir):
+def test_microbatcher_exactly_once_progress_and_resume(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir)
     total_rows = feed.count()
-    seen: list[int] = []
-    mb = MicroBatcher(
-        feed, "orders", batch_size=500, sink=lambda df, bid: seen.append(df.count())
-    )
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    mb = MicroBatcher(feed, sink, batch_size=500)
     emitted = mb.run_to_completion()
     assert emitted == total_rows
+    seen = [
+        spark.read.parquet(str(tmp_path / "out" / "data" / f"batch={b}")).count()
+        for b in sorted(sink.committed_batches())
+    ]
     assert sum(seen) == total_rows
     # backpressure signal: every batch except the last is exactly full (T3)
     assert all(n == 500 for n in seen[:-1])
-    # progress log replays to the max index (T2 resume)
-    assert resume_offset(mb.progress_log, "orders") == feed.agg(
-        F.max("change_seq")
-    ).collect()[0][0]
-    # resuming a fresh batcher from the stored offset emits nothing
-    mb2 = MicroBatcher(feed, "orders", batch_size=500)
-    mb2._offset = resume_offset(mb.progress_log, "orders")
+    # the manifest replays to the max index (T2 resume)
+    assert sink.last_progress() == feed.agg(F.max("change_seq")).collect()[0][0]
+    # a fresh batcher on the same sink resumes there and emits nothing
+    before = open(sink.manifest_path).read()
+    mb2 = MicroBatcher(feed, sink, batch_size=500)
     assert mb2.run_once() == 0
+    assert open(sink.manifest_path).read() == before
 
 
 def test_tombstones_follow_deletes(spark, sf_dir):
