@@ -3,9 +3,9 @@ surface (``python -m cdc_kafka``, reference ``options.py`` flag names,
 ``__main__.py:1-15``) plus its standalone tools:
 
     python -m sqlserver_cdc_to_kafka_spark --sf-dir DIR --sink-dir OUT
-        run the pipeline: drive the reverse-keyset snapshot to completion,
-        unify it with the change feed (T7) and write each topic's envelope
-        rows to the sink as parquet (main.py's produce loop, batch form).
+        run the pipeline: unify the whole-table snapshot with the change
+        feed (T7) in one plan and write each topic's envelope rows to the
+        sink as parquet in one write (main.py's produce loop, batch form).
     ... --run-validations
         run the validator family (validation.py:56-197 and
         progress_topic_validator.py analogs) and print one JSON line per
@@ -51,7 +51,8 @@ def _build_parser() -> argparse.ArgumentParser:
     p.add_argument("--options-json", default=None,
                    help="EngineConfig as a JSON object (overrides flag defaults)")
     # reference-named option flags (options.py)
-    p.add_argument("--db-row-batch-size", type=int, default=None)
+    p.add_argument("--db-row-batch-size", type=int, default=None,
+                   help="snapshot page size; batch mode writes the snapshot in one scan")
     p.add_argument("--table-include-regex", default=None)
     p.add_argument("--table-exclude-regex", default=None)
     p.add_argument("--snapshot-table-include-regex", default=None)
@@ -141,15 +142,13 @@ def _run_named_queries(spark, sf_dir: str, names: Sequence[str]) -> None:
 
 
 def _run_pipeline(spark, sf_dir: str, sink_dir: str, cfg: EngineConfig) -> None:
-    """Batch form of the reference's produce loop: snapshot-to-completion
-    unified with the change feed, one output dir per topic."""
+    """Batch form of the reference's produce loop: one unpaged snapshot scan
+    (nothing resumes mid-run) unified with the change feed, written once."""
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
     from sqlserver_cdc_to_kafka_spark.queries.cdc import cdc_events
-    from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import (
-        SnapshotStream,
-        unified_feed,
-    )
+    from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import unified_feed
     from sqlserver_cdc_to_kafka_spark.tables import load_table
 
     fq_name = "dbo.orders"
@@ -158,24 +157,18 @@ def _run_pipeline(spark, sf_dir: str, sink_dir: str, cfg: EngineConfig) -> None:
         return
     topic = cfg.topic_for("dbo", "orders")
     orders = load_table(spark, sf_dir, "orders")
-    pages: list = []
-    if cfg.table_snapshotted(fq_name):
-        pager = SnapshotStream(
-            orders, ["o_orderkey"], batch_size=cfg.db_row_batch_size
-        )
-        while (p := pager.next_page()) is not None:
-            pages.append(p)
+    snapshot = [orders] if cfg.table_snapshotted(fq_name) else []
     feed = cdc_events(spark, sf_dir)
     if cfg.disable_deletion_tombstones:
         feed = feed.filter(F.col("__operation") != 1)
-    out = unified_feed(pages, feed)
     path = f"{sink_dir}/{topic}"
-    out.write.mode("overwrite").parquet(path)
-    n = spark.read.parquet(path).count()
-    for p in pages:  # cached by the pager; the write above was their last use
-        p.unpersist()
-    _emit("topic_written", topic=topic, path=path, rows=n,
-          snapshot_pages=len(pages))
+    obs = Observation()
+    unified_feed(snapshot, feed).observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        F.count_if(F.col("__operation") == 0).alias("snapshot_rows"),
+    ).write.mode("overwrite").parquet(path)
+    _emit("topic_written", topic=topic, path=path, **obs.get)
 
 
 def _reset_progress(args: argparse.Namespace) -> int:

@@ -25,7 +25,7 @@ VALID_NEW_FOLLOW_START = ("earliest", "latest")
 class EngineConfig:
     # --- source / scan ---------------------------------------------------
     source_options: dict[str, str] = field(default_factory=dict)  # --db-conn-string etc.
-    db_row_batch_size: int = 2000  # --db-row-batch-size (options.py:282-285)
+    db_row_batch_size: int = 2000  # --db-row-batch-size (options.py:282-285); batch mode: one scan
     table_include_regex: str | None = None  # --table-include-regex
     table_exclude_regex: str | None = None  # --table-exclude-regex
     snapshot_table_include_regex: str | None = None  # --snapshot-table-include-regex

@@ -106,10 +106,11 @@ class TransactionalDirSink:
         ``reset_progress``) is a hard boundary for ITS kind only: a reset
         scoped to snapshot_rows must not wipe the change_rows resume point
         (per-(topic, kind) progress, like the reference). Snapshot pages
-        commit as change_rows, so a change_rows reset re-snapshots too."""
+        commit as change_rows, so a reset of either kind re-snapshots."""
+        bounds = {kind, "snapshot_rows"} if field == "snapshot_key" else {kind}
         resume = None
         for rec in self._records():
-            if rec.get("kind") != kind:
+            if rec.get("kind") not in bounds:
                 continue
             if rec.get("tombstone"):
                 resume = None  # epoch boundary: nothing before it counts
@@ -187,11 +188,13 @@ class TransactionalDirSink:
         from scratch. Data files are untouched (same as the reference: only
         the progress topic is rewritten) and other topics' sinks never see
         it. Returns the number of tombstones written."""
-        existing = [r for r in self.committed_batches().values() if r["kind"] in kinds]
-        if not existing:
+        kinds_seen = {r["kind"] for r in self.committed_batches().values()}
+        if self.last_progress(field="snapshot_key") is not None:
+            kinds_seen.add("snapshot_rows")  # pages commit as change_rows
+        present = [k for k in kinds if k in kinds_seen]
+        if not present:
             return 0
         next_id = self.next_batch_id()
-        present = [k for k in kinds if any(r["kind"] == k for r in existing)]
         tombs = [
             {
                 "topic": self.topic,
@@ -278,8 +281,9 @@ class TransactionalDirSink:
         final = os.path.join(self.root, "data", gen_dir)
         if os.path.exists(stage):
             shutil.rmtree(stage)
-        live.write.mode("overwrite").parquet(stage)
-        n = spark.read.parquet(stage).count()
+        obs = Observation()  # the write's own job counts the survivors
+        live.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(stage)
+        n = obs.get["n"]
         if os.path.exists(final):
             shutil.rmtree(final)
         os.rename(stage, final)

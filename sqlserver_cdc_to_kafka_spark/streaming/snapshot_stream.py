@@ -64,7 +64,7 @@ class SnapshotStream:
 
 def unified_feed(snapshot_pages: list[DataFrame], change_batch: DataFrame) -> DataFrame:
     """T7: one output feed carrying both snapshot rows (op=0, NULL LSN) and
-    change rows, on the shared envelope schema."""
+    change rows, on the shared envelope schema (a page may be the whole table)."""
     out = change_batch
     for p in snapshot_pages:
         env = snapshot_envelope(p)

@@ -6,10 +6,21 @@ the read-only modes emit JSON check lines and write nothing."""
 from __future__ import annotations
 
 import json
+import os
+from collections import Counter
 
 import pytest
 
 from sqlserver_cdc_to_kafka_spark.__main__ import main
+from sqlserver_cdc_to_kafka_spark.config import EngineConfig
+from sqlserver_cdc_to_kafka_spark.fixtures.cdc_events import cdc_events
+from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import PipelineRun
+from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
+from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import (
+    SnapshotStream,
+    unified_feed,
+)
+from sqlserver_cdc_to_kafka_spark.tables import load_table
 
 
 def _emitted(capsys):
@@ -24,12 +35,55 @@ def test_pipeline_mode_writes_topic(spark, sf_dir, tmp_path, capsys):
     out = _emitted(capsys)
     (row,) = [r for r in out if r["kind"] == "topic_written"]
     assert row["topic"] == "dbo.orders.cdc"
-    assert row["snapshot_pages"] >= 2  # 500-row pages actually paginated
     # every order exactly once (snapshot) plus every change event
     orders_n = spark.read.parquet(f"{sf_dir}/orders.parquet").count()
+    assert row["snapshot_rows"] == orders_n
     written = spark.read.parquet(row["path"])
     assert written.filter("__operation = 0").count() == orders_n
     assert row["rows"] > orders_n
+    assert written.count() == row["rows"]
+
+
+def _persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def _rows_without_event_time(df) -> Counter:
+    # snapshot rows stamp __event_time with the wall clock at run time
+    return Counter(map(repr, df.drop("__event_time").collect()))
+
+
+@pytest.mark.parametrize("batch_size", [None, 500])
+def test_pipeline_mode_matches_paged_snapshot(spark, sf_dir, tmp_path, capsys,
+                                              batch_size):
+    """The one-scan CLI writes the same rows as the keyset-paged snapshot
+    unified with the change feed, whatever the page size, and leaves no
+    cached data behind."""
+    argv = ["--sf-dir", sf_dir, "--sink-dir", str(tmp_path)]
+    if batch_size is not None:
+        argv += ["--db-row-batch-size", str(batch_size)]
+    persisted = _persisted(spark)
+    assert main(argv) == 0
+    assert _persisted(spark) == persisted
+    (row,) = [r for r in _emitted(capsys) if r["kind"] == "topic_written"]
+    written = spark.read.parquet(row["path"])
+    assert written.count() == row["rows"]
+
+    pager = SnapshotStream(
+        load_table(spark, sf_dir, "orders"), ["o_orderkey"],
+        batch_size=batch_size or EngineConfig().db_row_batch_size,
+    )
+    pages = []
+    while (p := pager.next_page()) is not None:
+        pages.append(p)
+    try:
+        expected = unified_feed(pages, cdc_events(spark, sf_dir))
+        assert _rows_without_event_time(written) == _rows_without_event_time(
+            expected.select(*written.columns)
+        )
+    finally:
+        for p in pages:
+            p.unpersist()
 
 
 def test_tombstone_disable_flag(spark, sf_dir, tmp_path, capsys):
@@ -127,6 +181,49 @@ def test_reset_progress_tool(spark, sf_dir, tmp_path, capsys):
     # a fresh batcher over the reset topic starts from scratch
     mb = MicroBatcher(feed, sinks["orders_cdc"], batch_size=700)
     assert mb.run_once() == 700
+
+
+def test_snapshot_only_reset_resnapshots_pipeline_run(spark, sf_dir, tmp_path,
+                                                     capsys):
+    """``--progress-kind snapshot_rows`` on a PipelineRun sink (whose
+    snapshot pages commit as change_rows records) re-snapshots the table and
+    leaves the change position where it was."""
+
+    def run(sink):
+        return PipelineRun(
+            spark, load_table(spark, sf_dir, "orders"), cdc_events(spark, sf_dir),
+            ["o_orderkey"], sink, batch_size=700,
+        ).run()
+
+    sink = TransactionalDirSink(str(tmp_path / "orders_cdc"), "orders_cdc")
+    assert run(sink) > 0
+    position = sink.last_progress()
+    assert position is not None
+    assert sink.last_progress(field="snapshot_key") is not None
+
+    rc = main(["--reset-progress", "--topic-names", "orders_cdc",
+               "--sink-dir", str(tmp_path), "--progress-kind", "snapshot_rows",
+               "--execute"])
+    assert rc == 0
+    (row,) = [r for r in _emitted(capsys) if r["kind"] == "reset"]
+    assert row["executed"] is True and row["tombstones_written"] == 1
+    assert sink.last_progress() == position
+    assert sink.last_progress(field="snapshot_key") is None
+
+    ids_before = set(sink.committed_batches())
+    orders_n = load_table(spark, sf_dir, "orders").count()
+    assert run(sink) == orders_n
+    new_ids = sorted(set(sink.committed_batches()) - ids_before)
+    rerun = spark.read.parquet(
+        *[os.path.join(sink.root, "data", f"batch={b}") for b in new_ids]
+    )
+    assert rerun.count() == orders_n
+    assert rerun.filter("__operation != 0").count() == 0
+    assert sink.last_progress() == position
+
+    ids_before = set(sink.committed_batches())
+    assert run(sink) == 0
+    assert set(sink.committed_batches()) == ids_before
 
 
 def test_run_query_and_list(spark, sf_dir, capsys):

@@ -206,6 +206,25 @@ def test_rerun_after_compaction_commits_nothing(spark, sf_dir, tmp_path):
     assert sink2.read_committed(spark).count() == n_live
 
 
+def test_compact_counts_from_its_own_write(spark, sf_dir, tmp_path, monkeypatch):
+    """compact() takes its row count from an Observation on the compacted
+    write: it never reads its own staged generation back."""
+    from pyspark.sql import DataFrameReader
+
+    _, _, sink, _, run = _setup(spark, sf_dir, tmp_path)
+    run.run()
+    read, paths = DataFrameReader.parquet, []
+
+    def parquet(self, *args, **kwargs):
+        paths.extend(args)
+        return read(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    n_live = sink.compact(spark, ["o_orderkey"])
+    assert paths and not [p for p in paths if "_staging" in p]
+    assert n_live == sink.read_committed(spark).count()
+
+
 def test_sink_log_compaction(spark, sf_dir, tmp_path):
     orders, feed, sink, rep, run = _setup(spark, sf_dir, tmp_path)
     run.run()
