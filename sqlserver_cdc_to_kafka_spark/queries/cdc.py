@@ -581,7 +581,7 @@ def q_stream_drain_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     through Structured Streaming into a memory sink, and the drained rows
     must hash-match the BATCH oracle — the streaming path and the batch
     path are the same data, proved, not asserted. Rate-limited micro-batch
-    windows (batchSize) exercise offset planning + parallel range reads."""
+    windows (batchSize) exercise offset planning + range reads."""
     import glob as _glob
     import shutil
     import tempfile

@@ -13,10 +13,10 @@ transaction, and emits delete tombstones. Spark-first restatement:
   a full batch means "still behind, poll again immediately").
 - **progress** (T2): the sink's manifest is the only progress state, as the
   compacted progress topic is the reference's (progress_tracking.py:235-258).
-  A trigger reads its start position and its batch id from the manifest and
-  commits data and new position together, so a batcher that starts on a
-  sink — after a clean stop or a crash — picks up where the last commit
-  left off.
+  A trigger reads its start position from the manifest and commits data
+  and new position together under an id the sink picks, so a batcher that
+  starts on a sink — after a clean stop or a crash — picks up where the
+  last commit left off.
 - **order** (O1/O2): within a micro-batch, emission is ordered by the change
   index (repartitionByRange + sortWithinPartitions at scale).
 
@@ -79,17 +79,17 @@ def with_tombstones(
 class MicroBatcher:
     """Pull-mode micro-batch driver over a bounded feed (the shape of a
     foreachBatch JDBC puller). It keeps no progress of its own: each trigger
-    polls after the sink's last committed position and commits under the id
-    after the highest one in the sink's manifest — data and progress in one
-    commit, as in the reference's transaction (main.py:319-350)."""
+    polls after the sink's last committed position and commits through the
+    sink, which numbers the batch — data and progress in one commit, as in
+    the reference's transaction (main.py:319-350)."""
 
     feed: DataFrame
     sink: TransactionalDirSink
     idx_col: str = "change_seq"
     batch_size: int = DEFAULT_BATCH_SIZE
-    # commits (batch, batch_id) to ``sink`` and says whether it did;
-    # ``sink.commit_batch`` when None
-    commit: Callable[[DataFrame, int], bool] | None = None
+    # commits a batch to ``sink``, truthy when it did; ``sink.commit_batch``
+    # when None
+    commit: Callable[[DataFrame], object] | None = None
 
     def run_once(self) -> int:
         """One trigger: poll → commit. Returns the rows polled, 0 when the
@@ -103,7 +103,7 @@ class MicroBatcher:
             self.feed, self.sink.last_progress(), self.idx_col, self.batch_size
         ).observe(obs, F.count(F.lit(1)).alias("rows"))
         commit = self.commit or self.sink.commit_batch
-        if not commit(batch, self.sink.next_batch_id()):
+        if not commit(batch):
             return 0
         return obs.get["rows"]
 

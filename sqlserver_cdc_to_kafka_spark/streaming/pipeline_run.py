@@ -8,9 +8,9 @@ self-validation over the engine's own committed output (§5's validators as
 product).
 
 The sink's manifest is the run's only progress state: a run reads its
-snapshot resume key, its change position and each commit's batch id from
-it, so a run that crashed resumes where its last commit left off and a run
-over a finished sink commits nothing.
+snapshot resume key and its change position from it, and the sink numbers
+each commit, so a run that crashed resumes where its last commit left off
+and a run over a finished sink commits nothing.
 
 This is pull-mode (bounded feeds) — the test harness shape; the same
 composition drives ``readStream`` sources unchanged."""
@@ -33,7 +33,10 @@ from sqlserver_cdc_to_kafka_spark.streaming.metrics import (
     report_batch,
 )
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
-from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import SnapshotStream
+from sqlserver_cdc_to_kafka_spark.streaming.snapshot_stream import (
+    SnapshotStream,
+    snapshot_rows,
+)
 
 
 @dataclass
@@ -65,16 +68,15 @@ class PipelineRun:
             self.change_feed,
             self.sink,
             batch_size=self.batch_size,
-            commit=self._commit_changes,
+            commit=lambda batch: self._commit(with_tombstones(batch, self.key_cols)),
         )
         while True:
             page = snap.next_page()
             if page is not None:
-                self._commit(
-                    self._snapshot_envelope(page),
-                    self.sink.next_batch_id(),
-                    snapshot_key=snap.last_key,
-                )
+                rows = snapshot_rows(page, self.change_feed)
+                # on the feed's types, as all the sink's batches (the read time too)
+                cast = [F.col(c).cast(self.change_feed.schema[c].dataType) for c in rows.columns]
+                self._commit(rows.select(*cast, F.lit(False).alias("__tombstone")), snap.last_key)
                 page.unpersist()
             emitted = mb.run_once()
             if snap.completed and emitted < self.batch_size:
@@ -82,30 +84,15 @@ class PipelineRun:
 
     # -- internals ---------------------------------------------------------
 
-    def _snapshot_envelope(self, page: DataFrame) -> DataFrame:
-        # same output schema as the tombstoned change batches (one sink)
-        cols = self.change_feed.columns
-        out = page
-        for c in cols:
-            if c not in page.columns:
-                dt = self.change_feed.schema[c].dataType
-                if c == "__operation":
-                    out = out.withColumn(c, F.lit(0))
-                else:
-                    out = out.withColumn(c, F.lit(None).cast(dt))
-        return out.select(*cols).withColumn("__tombstone", F.lit(False))
-
-    def _commit_changes(self, batch: DataFrame, batch_id: int) -> bool:
-        return self._commit(with_tombstones(batch, self.key_cols), batch_id) > 0
-
-    def _commit(self, batch: DataFrame, batch_id: int, snapshot_key=None) -> int:
+    def _commit(self, batch: DataFrame, snapshot_key=None) -> int:
         observed, obs = observed_batch(batch)
         t0 = time.time()
         # one job: the write fulfils both the metrics Observation and the
         # sink's, which supplies the manifest position
-        if not self.sink.commit_batch(observed, batch_id, snapshot_key=snapshot_key):
+        record = self.sink.commit_batch(observed, snapshot_key=snapshot_key)
+        if record is None:
             return 0
-        m = report_batch(obs.get, batch_id, time.time() - t0, self.reporters)
+        m = report_batch(obs.get, record["batch_id"], time.time() - t0, self.reporters)
         self.rows_committed += m.rows
         return m.rows
 
@@ -113,12 +100,18 @@ class PipelineRun:
 def foreach_batch_writer(sink: TransactionalDirSink):
     """The production binding (§3.1 Spark restatement): a foreachBatch
     function committing every micro-batch through the transactional sink.
-    Spark's checkpoint provides replay; the sink's batch-id idempotence makes
-    the replay exactly-once (T2) — the pair is the reference's
-    data+progress Kafka transaction. The sink's one write job skips empty
-    batches and takes the position, so the uncached batch is read once."""
+    Spark's checkpoint provides replay; the sink's position idempotence
+    makes the replay exactly-once (T2) — the pair is the reference's
+    data+progress Kafka transaction. Spark's batch id is ignored, so a
+    replayed micro-batch, even one re-planned after the checkpoint was
+    lost, commits only its rows past the manifest's position. Precondition:
+    the source delivers ``change_seq`` in ascending order across
+    micro-batches, as a CDC log does. The stream's reads start at its
+    checkpoint, not at the manifest: after a sink reset it re-ingests only
+    if its checkpoint is deleted too. The sink's one write job reads the
+    uncached batch once."""
 
-    def write(batch: DataFrame, batch_id: int) -> None:
-        sink.commit_batch(batch, batch_id)
+    def write(batch: DataFrame, _batch_id: int) -> None:
+        sink.commit_batch(batch)
 
     return write

@@ -6,14 +6,13 @@ records are produced inside ONE Kafka transaction (``main.py:319-350``,
 ``kafka.py:134-156``) — a crash never leaves data without progress or
 vice versa — and a restart resumes from the progress topic alone
 (``progress_tracking.py:235-258``). Spark's Kafka sink alone is
-at-least-once, so the idiomatic restatement is ``foreachBatch`` + an
-idempotent, batch-id-keyed commit protocol — which is exactly what
-Structured Streaming's own file sink does with its manifest log,
-generalized here so any directory-backed format gets it.
+at-least-once, so the idiomatic restatement is ``foreachBatch`` + a sink
+idempotent by SOURCE POSITION (not by Spark's batch id, so it never has to
+agree with Spark's checkpoint) that numbers its own commits.
 
 ``TransactionalDirSink`` implements that protocol without external
 dependencies (no Kafka broker in this environment; swapping ``_write_files``
-for a transactional producer keyed by batch id gives the Kafka version):
+for a transactional producer gives the Kafka version):
 
 1. write the batch under ``_staging/batch=<id>/`` (side-effect-free retry)
    with an ``Observation`` attached, so the write's own job also counts the
@@ -23,20 +22,24 @@ for a transactional producer keyed by batch id gives the Kafka version):
 3. append the progress record ``(topic, kind, position, batch_id)`` to the
    manifest and fsync it, the position being the observed
    ``max(change_seq)`` — readers only see directories listed in the
-   manifest, so a crash between 2 and 3 is invisible and a replay of the
-   same batch id is idempotent (stage dir overwritten, manifest append
-   deduped by batch id). A record commits with its line's newline: an
-   append a crash cut short leaves a torn last line, which readers skip
+   manifest, so a crash between 2 and 3 is invisible (the next commit takes
+   the same id over it). Replays are deduped by position: step 1 writes
+   only rows whose ``change_seq`` is null (snapshot rows, tombstones) or
+   above the committed position. A record commits with its line's newline:
+   an append a crash cut short leaves a torn last line, which readers skip
    and the next append cuts off.
 
-The manifest is the pull-mode pipeline's only progress state: the change
+The manifest is the pull drivers' only progress state: the change
 position (``last_progress``), the snapshot resume key (a snapshot page's
-``snapshot_key`` field) and the next batch id (``next_batch_id``) are all
-read back from it, so a run that starts on an existing sink resumes there.
+``snapshot_key`` field) and the next batch id are all read back from it, so
+a run that starts on an existing sink resumes there. A stream reads from
+Spark's checkpoint, but through the same position filter.
 """
 
 from __future__ import annotations
 
+import datetime
+import decimal
 import json
 import os
 import shutil
@@ -46,10 +49,18 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
+def _key_text(value) -> str:
+    # a date or decimal snapshot key resumes through key_tuple_below's cast
+    # to the column type; a binary one would not, so it raises
+    if isinstance(value, (datetime.date, decimal.Decimal)):
+        return str(value)
+    raise TypeError(f"cannot store snapshot key value {value!r} in the manifest")
+
+
 @dataclass
 class TransactionalDirSink:
     """Exactly-once directory sink: data files + progress manifest commit
-    together, keyed by batch id (T2)."""
+    together, idempotent by change position (T2)."""
 
     root: str
     topic: str
@@ -79,22 +90,60 @@ class TransactionalDirSink:
         """Append manifest records durably, first cutting off a torn last
         line (see ``_records``) so the new records never fuse with it."""
         with open(self.manifest_path, "a+b") as f:
-            f.seek(0)
-            f.truncate(f.read().rfind(b"\n") + 1)
-            f.write(b"".join(json.dumps(r).encode() + b"\n" for r in records))
+            end = f.seek(0, os.SEEK_END)
+            while end:  # back to the last newline: reads the torn bytes only
+                f.seek(end - 1)
+                if f.read(1) == b"\n":
+                    break
+                end -= 1
+            f.truncate(end)
+            f.write(
+                b"".join(json.dumps(r, default=_key_text).encode() + b"\n" for r in records)
+            )
             f.flush()
             os.fsync(f.fileno())
 
-    def committed_batches(self) -> dict[int, dict]:
-        out: dict[int, dict] = {}
-        for rec in self._records():
-            out[rec["batch_id"]] = rec  # last write wins (replay supersedes)
-        return out
+    @staticmethod
+    def _next_id(records: list[dict]) -> int:
+        # the id after the highest one in the manifest, tombstones included
+        return max((r["batch_id"] for r in records), default=-1) + 1
 
-    def next_batch_id(self) -> int:
-        """The id after the highest one in the manifest, reset tombstones
-        included — the next pull-mode commit's id (0 on an empty sink)."""
-        return max((r["batch_id"] for r in self._records()), default=-1) + 1
+    @staticmethod
+    def _visible(records: list[dict]) -> list[dict]:
+        """The data records a reader sees: a change_rows reset drops the
+        data before it once the first commit after it re-ingests from the
+        start (a snapshot page, or rows back to the first change batch's
+        position); one past that (a stream resumed from its checkpoint) does
+        not, so that data stays."""
+        data: list[dict] = []
+        reset = False
+        for rec in records:
+            if rec.get("tombstone"):
+                reset = reset or rec["kind"] == "change_rows"
+                continue
+            if reset:
+                start = next((r["position"] for r in data if r.get("position") is not None), None)
+                if rec.get("first") is None or start is None or rec["first"] <= start:
+                    data = []
+                reset = False
+            data.append(rec)
+        return data
+
+    @staticmethod
+    def _progress(records: list[dict], kind: str, field: str):
+        bounds = {kind, "snapshot_rows"} if field == "snapshot_key" else {kind}
+        resume = None
+        for rec in records:
+            if rec.get("kind") not in bounds:
+                continue
+            if rec.get("tombstone"):
+                resume = None  # epoch boundary: nothing before it counts
+            elif rec.get(field) is not None:
+                resume = rec[field]
+        return resume
+
+    def committed_batches(self) -> dict[int, dict]:
+        return {rec["batch_id"]: rec for rec in self._records()}
 
     def last_progress(self, kind: str = "change_rows", field: str = "position"):
         """T2 resume point: the last committed value of ``field`` FOR THIS
@@ -107,94 +156,72 @@ class TransactionalDirSink:
         scoped to snapshot_rows must not wipe the change_rows resume point
         (per-(topic, kind) progress, like the reference). Snapshot pages
         commit as change_rows, so a reset of either kind re-snapshots."""
-        bounds = {kind, "snapshot_rows"} if field == "snapshot_key" else {kind}
-        resume = None
-        for rec in self._records():
-            if rec.get("kind") not in bounds:
-                continue
-            if rec.get("tombstone"):
-                resume = None  # epoch boundary: nothing before it counts
-            elif rec.get(field) is not None:
-                resume = rec[field]
-        return resume
+        return self._progress(self._records(), kind, field)
 
-    def _current_epoch_batch_ids(self, kind: str = "change_rows") -> set[int]:
-        """Batch ids committed since the last reset tombstone of this kind —
-        the idempotence scope. After a reset, a from-scratch rerun restarts
-        at batch id 0; ids from BEFORE the tombstone must not shadow it
-        (they'd silently drop every re-ingested batch), so the duplicate
-        check is epoch-local."""
-        ids: set[int] = set()
-        for rec in self._records():
-            if rec.get("kind") != kind:
-                continue
-            if rec.get("tombstone"):
-                ids.clear()
-            else:
-                ids.add(rec["batch_id"])
-        return ids
+    def commit_batch(self, batch: DataFrame, snapshot_key=None) -> dict | None:
+        """Commit the rows of ``batch`` past the committed position (and
+        those with a null ``change_seq``) in one Spark job, under the id
+        after the highest one in the manifest (one manifest read gives
+        both), so a replayed batch commits only its new rows; this assumes
+        ``change_seq`` ascends across batches, as CDC's does. Returns the
+        manifest record, or None when no row was left to commit.
 
-    def commit_batch(
-        self, batch: DataFrame, batch_id: int, position=None, snapshot_key=None
-    ) -> bool:
-        """Idempotent commit in one Spark job: returns False (no-op) if this
-        batch id is already committed in the current epoch — the
-        crash-replay path — or if the batch is empty.
-
-        The row count and the manifest position come from an Observation
-        on the write itself: ``count(1)`` and ``max(change_seq)``, so no
-        separate job scans the batch. Snapshot pages (all-null
-        ``change_seq``) record ``None``. A non-None ``position`` overrides
-        the observed one. A snapshot page passes the last key it read as
-        ``snapshot_key``; the record keeps it in a field of its own, so a
-        restart pages on below it (``last_progress(field="snapshot_key")``).
-
-        A replay of a pre-reset batch id is NOT a duplicate: it overwrites
-        the old data directory and its manifest record supersedes the old
-        one (last write wins), which is exactly re-ingest-from-scratch."""
-        if batch_id in self._current_epoch_batch_ids("change_rows"):
-            return False
+        An Observation on the write gives the row count and the record's
+        ``first``/``position`` (min/max ``change_seq``: ``None`` for a
+        snapshot page, which passes its last key as ``snapshot_key``)."""
+        records = self._records()
+        position = self._progress(records, "change_rows", "position")
+        batch_id = self._next_id(records)
+        if position is not None:
+            seq = F.col("change_seq")
+            batch = batch.filter(seq.isNull() | (seq > F.lit(position)))
         stage = os.path.join(self.root, "_staging", f"batch={batch_id}")
         final = os.path.join(self.root, "data", f"batch={batch_id}")
         if os.path.exists(stage):
             shutil.rmtree(stage)  # leftover from a crashed attempt
         obs = Observation()
         batch.observe(
-            obs, F.count(F.lit(1)).alias("rows"), F.max("change_seq").alias("pos")
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.min("change_seq").alias("first"),
+            F.max("change_seq").alias("pos"),
         ).write.mode("overwrite").parquet(stage)
         observed = obs.get
         if not observed["rows"]:
             shutil.rmtree(stage)
-            return False
+            return None
         if os.path.exists(final):
-            shutil.rmtree(final)
+            shutil.rmtree(final)  # renamed into place by a crashed commit
         os.rename(stage, final)
-        self._append(
-            {
-                "topic": self.topic,
-                "kind": "change_rows",
-                "position": observed["pos"] if position is None else position,
-                "batch_id": batch_id,
-                "snapshot_key": snapshot_key,
-            }
-        )
-        return True
+        record = {
+            "topic": self.topic,
+            "kind": "change_rows",
+            "first": observed["first"],
+            "position": observed["pos"],
+            "batch_id": batch_id,
+            "snapshot_key": snapshot_key,
+        }
+        self._append(record)
+        return record
 
     def reset_progress(self, kinds: tuple[str, ...] = ("change_rows",)) -> int:
         """progress_reset_tool analog (reference progress_reset_tool.py:12,
         progress_tracking.py reset_progress): append a *tombstone* progress
-        record per (topic, kind) — position=None, a fresh batch-id epoch —
-        so replaying the log yields no resume point and the next run starts
+        record per (topic, kind) — position=None, a fresh epoch — so
+        replaying the log yields no resume point and the next run starts
         from scratch. Data files are untouched (same as the reference: only
         the progress topic is rewritten) and other topics' sinks never see
-        it. Returns the number of tombstones written."""
-        kinds_seen = {r["kind"] for r in self.committed_batches().values()}
-        if self.last_progress(field="snapshot_key") is not None:
+        it; reads drop them once a commit re-ingests from the start (see
+        ``_visible``), which a stream does only with its checkpoint deleted.
+        Returns the number of tombstones written."""
+        records = self._records()
+        kinds_seen = {r["kind"] for r in records}
+        if self._progress(records, "change_rows", "snapshot_key") is not None:
             kinds_seen.add("snapshot_rows")  # pages commit as change_rows
         present = [k for k in kinds if k in kinds_seen]
         if not present:
             return 0
-        next_id = self.next_batch_id()
+        next_id = self._next_id(records)
         tombs = [
             {
                 "topic": self.topic,
@@ -208,25 +235,24 @@ class TransactionalDirSink:
         self._append(*tombs)
         return len(tombs)
 
+    def _data_dir(self, rec: dict) -> str:
+        return os.path.join(self.root, "data", rec.get("path", f"batch={rec['batch_id']}"))
+
     def read_committed(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
-        """Read ONLY manifest-listed data (uncommitted staging invisible).
-        Records may carry an explicit ``path`` (compacted generations).
+        """Read ONLY manifest-listed data, less what a reset's re-ingest
+        superseded (see ``_visible``). Records may carry an explicit
+        ``path`` (compacted generations).
 
         ``as_of``: time travel — read the table as it was after batch id
         ``as_of`` committed (later batches invisible). Compaction collapses
         history, so travel only reaches past the last compacted generation."""
-        batches = self.committed_batches()
+        records = self._records()
         if as_of is not None:
-            batches = {b: r for b, r in batches.items() if b <= as_of}
-        # progress-reset tombstones carry no data directory
-        batches = {b: r for b, r in batches.items() if not r.get("tombstone")}
-        dirs = [
-            os.path.join(self.root, "data", batches[b].get("path", f"batch={b}"))
-            for b in sorted(batches)
-        ]
-        if not dirs:
+            records = [r for r in records if r["batch_id"] <= as_of]
+        batches = self._visible(records)
+        if not batches:
             raise ValueError("no committed batches" + (f" at or before {as_of}" if as_of is not None else ""))
-        return spark.read.parquet(*dirs)
+        return spark.read.parquet(*map(self._data_dir, batches))
 
     def compact(
         self,
@@ -236,9 +262,10 @@ class TransactionalDirSink:
         tombstone_col: str = "__tombstone",
     ) -> int:
         """Log compaction (the background process a compacted Kafka topic
-        gets from the broker): collapse all committed batches to the last
-        record per key, dropping keys whose final record is a tombstone, and
-        atomically replace the batch directories with one compacted batch.
+        gets from the broker): collapse the batches ``read_committed`` reads
+        to the last record per key, dropping keys whose final record is a
+        tombstone, and atomically replace the batch directories with one
+        compacted batch.
 
         Progress is preserved: the compacted batch takes the max committed
         batch id, position and snapshot key, so resume semantics are
@@ -249,9 +276,10 @@ class TransactionalDirSink:
             last_value_per_key,
         )
 
-        batches = self.committed_batches()
-        if not batches:
-            return 0
+        records = self._records()
+        last = next((r for r in reversed(records) if r["kind"] == "change_rows"), None)
+        if last is None or last.get("tombstone"):
+            return 0  # an empty sink, or a reset awaiting its first commit
         df = self.read_committed(spark)
         # NULL order values are either snapshot rows (base state — oldest for
         # their key: every change logically follows the backfill, T7) or
@@ -267,10 +295,10 @@ class TransactionalDirSink:
         )
         live = last.filter(~F.col(tombstone_col)).drop("__ordk")
 
-        max_id = max(batches)
+        max_id = self._next_id(records) - 1
         # capture progress BEFORE rewriting the manifest
-        position = self.last_progress()
-        snapshot_key = self.last_progress(field="snapshot_key")
+        position = self._progress(records, "change_rows", "position")
+        snapshot_key = self._progress(records, "change_rows", "snapshot_key")
         # crash-safe ordering: (1) write the compacted generation under a
         # fresh directory name, (2) atomically replace the manifest — THE
         # commit point: readers switch from the old dirs to the new one in
@@ -305,8 +333,8 @@ class TransactionalDirSink:
             f.flush()
             os.fsync(f.fileno())
         os.replace(tmp_manifest, self.manifest_path)  # commit point
-        for b, rec in batches.items():
-            d = os.path.join(self.root, "data", rec.get("path", f"batch={b}"))
+        for rec in records:  # dirs a reset's re-ingest superseded go too
+            d = self._data_dir(rec)
             if rec.get("path") != gen_dir and os.path.exists(d):
                 shutil.rmtree(d)
         return n

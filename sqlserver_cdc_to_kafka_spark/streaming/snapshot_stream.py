@@ -62,14 +62,22 @@ class SnapshotStream:
         return page
 
 
+def snapshot_rows(page: DataFrame, feed: DataFrame) -> DataFrame:
+    """T7: snapshot rows (op=0, NULL LSN, read time, all columns updated) on
+    ``feed``'s columns, a column the envelope lacks as a NULL of the feed's
+    type (a page may be the whole table)."""
+    env = snapshot_envelope(page)
+    return env.select(
+        *[
+            c if c in env.columns else F.lit(None).cast(feed.schema[c].dataType).alias(c)
+            for c in feed.columns
+        ]
+    )
+
+
 def unified_feed(snapshot_pages: list[DataFrame], change_batch: DataFrame) -> DataFrame:
-    """T7: one output feed carrying both snapshot rows (op=0, NULL LSN) and
-    change rows, on the shared envelope schema (a page may be the whole table)."""
+    """T7: one output feed carrying both snapshot rows and change rows."""
     out = change_batch
     for p in snapshot_pages:
-        env = snapshot_envelope(p)
-        missing = [c for c in change_batch.columns if c not in env.columns]
-        for c in missing:
-            env = env.withColumn(c, F.lit(None).cast(change_batch.schema[c].dataType))
-        out = out.unionByName(env.select(*change_batch.columns))
+        out = out.unionByName(snapshot_rows(p, change_batch))
     return out

@@ -10,6 +10,7 @@ import os
 from collections import Counter
 
 import pytest
+from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from sqlserver_cdc_to_kafka_spark.__main__ import main
 from sqlserver_cdc_to_kafka_spark.config import EngineConfig
@@ -224,6 +225,33 @@ def test_snapshot_only_reset_resnapshots_pipeline_run(spark, sf_dir, tmp_path,
     ids_before = set(sink.committed_batches())
     assert run(sink) == 0
     assert set(sink.committed_batches()) == ids_before
+
+
+def test_pipeline_run_snapshot_rows_match_the_cli(spark, sf_dir, tmp_path, capsys):
+    """Both drivers write the same snapshot envelope: with the wall-clock
+    read time projected out, a PipelineRun sink's snapshot rows equal the
+    CLI's, and neither leaves the read time or updated fields NULL."""
+    assert main(["--sf-dir", sf_dir, "--sink-dir", str(tmp_path / "cli")]) == 0
+    (row,) = [r for r in _emitted(capsys) if r["kind"] == "topic_written"]
+    cli = spark.read.parquet(row["path"]).filter("__operation = 0")
+
+    sink = TransactionalDirSink(str(tmp_path / "run"), "orders")
+    PipelineRun(
+        spark, load_table(spark, sf_dir, "orders"), cdc_events(spark, sf_dir),
+        ["o_orderkey"], sink, batch_size=700,
+    ).run()
+    run = sink.read_committed(spark).filter("__operation = 0")
+
+    assert run.columns == cli.columns + ["__tombstone"]
+    # the CLI's union keeps the read time's zoned type; the sink's batches
+    # share the change feed's zone-less one
+    assert isinstance(cli.schema["__event_time"].dataType, TimestampType)
+    assert isinstance(run.schema["__event_time"].dataType, TimestampNTZType)
+    assert _rows_without_event_time(run.drop("__tombstone")) == (
+        _rows_without_event_time(cli)
+    )
+    for df in (cli, run):
+        assert df.filter("__event_time IS NULL OR __updated_fields IS NULL").count() == 0
 
 
 def test_run_query_and_list(spark, sf_dir, capsys):

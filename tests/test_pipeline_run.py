@@ -42,7 +42,7 @@ def _crash_after_commit(sink, k):
 
     def commit_batch(*args, **kwargs):
         ok = commit(*args, **kwargs)
-        done.append(ok)
+        done.append(bool(ok))
         if done.count(True) == k:
             raise Crash
         return ok
@@ -51,7 +51,10 @@ def _crash_after_commit(sink, k):
 
 
 def _committed_rows(spark, sink) -> Counter:
-    return Counter(map(repr, sink.read_committed(spark).collect()))
+    # snapshot rows stamp __event_time with the wall clock at run time
+    out = sink.read_committed(spark)
+    read_time = F.when(F.col("__operation") != 0, F.col("__event_time"))
+    return Counter(map(repr, out.withColumn("__event_time", read_time).collect()))
 
 
 def _manifest_ids(sink) -> list[int]:
@@ -194,6 +197,44 @@ def test_crash_between_data_rename_and_manifest_append(
     assert len(ids) == len(set(ids)) == len(CRASH_POINTS)
 
 
+def test_date_keyed_snapshot_resumes_after_crash(spark, tmp_path):
+    """A snapshot key JSON has no type for (a date) is stored so that the
+    resumed run's keyset seek restores it: a crash after the first page
+    resumes below that page, and every row commits exactly once."""
+    day = F.lit("2020-01-01").cast("date")
+    table = spark.range(1200).select(
+        F.date_add(day, F.col("id").cast("int")).alias("d"), F.col("id").alias("v")
+    )
+    feed = spark.range(50).select(
+        F.lit(4).alias("__operation"),
+        F.col("id").alias("change_seq"),
+        F.date_add(day, F.col("id").cast("int")).alias("d"),
+        (F.col("id") + 1000).alias("v"),
+    )
+
+    def run(crash_after=None):
+        sink = TransactionalDirSink(str(tmp_path / "out"), "days")
+        if crash_after:
+            _crash_after_commit(sink, crash_after)
+        return sink, PipelineRun(spark, table, feed, ["d"], sink, batch_size=500)
+
+    sink, crashing = run(crash_after=1)
+    with pytest.raises(Crash):
+        crashing.run()
+    assert len(_manifest_ids(sink)) == 1
+
+    sink, resumed = run()
+    assert resumed.run() == 1200 - 500 + 50
+    got = Counter(
+        tuple(r) for r in sink.read_committed(spark).select("__operation", "d", "v").collect()
+    )
+    want = Counter(tuple(r) for r in table.select(F.lit(0), "d", "v").collect())
+    want.update(tuple(r) for r in feed.select("__operation", "d", "v").collect())
+    assert got == want
+    ids = _manifest_ids(sink)
+    assert len(ids) == len(set(ids)) == 4
+
+
 def test_rerun_after_compaction_commits_nothing(spark, sf_dir, tmp_path):
     """compact() keeps the change position and the snapshot key, so a rerun
     over the compacted sink neither re-snapshots nor re-tails."""
@@ -320,14 +361,14 @@ def test_compaction_twice_with_new_batches_between(spark, sf_dir, tmp_path):
     run.run()
     n1 = sink.compact(spark, ["o_orderkey"])
     # new change batch arrives after compaction: re-insert 5 deleted keys
-    deleted = feed.filter(F.col("__operation") == 1).limit(5)
+    deleted = feed.filter(F.col("__operation") == 1).orderBy("change_seq").limit(5)
     revived = deleted.withColumn("__operation", F.lit(2)).withColumn(
         "change_seq", F.col("change_seq") + 1_000_000
     ).withColumn("__tombstone", F.lit(False))
     next_id = max(sink.committed_batches()) + 1
-    assert sink.commit_batch(revived, next_id, 99_999_999)
+    assert sink.commit_batch(revived)["batch_id"] == next_id
     n2 = sink.compact(spark, ["o_orderkey"])
     assert n2 == n1 + 5
-    assert sink.last_progress() == 99_999_999
+    assert sink.last_progress() == revived.agg(F.max("change_seq")).collect()[0][0]
     out = sink.read_committed(spark)
     assert out.count() == n2

@@ -1,7 +1,9 @@
 """The sink's commit costs one Spark job: rows and manifest position come
 from an Observation on the batch's own write (T2), so neither the sink nor
 its callers scan a batch a second time. Also: empty batches commit
-nothing, and a torn trailing manifest line is skipped, not fatal."""
+nothing, a torn trailing manifest line is skipped, not fatal, a stream
+that loses its checkpoint still commits every row once, and a reset never
+hides rows a stream did not re-ingest."""
 
 from __future__ import annotations
 
@@ -51,30 +53,39 @@ def _feed_file(spark, sf_dir, tmp_path) -> str:
 
 
 def test_commit_batch_is_one_job(spark, sf_dir, tmp_path):
-    feed = spark.read.parquet(_feed_file(spark, sf_dir, tmp_path)).filter(
-        F.col("change_seq") < 1500
-    )
+    log = spark.read.parquet(_feed_file(spark, sf_dir, tmp_path))
+    feed = log.filter(F.col("change_seq") < 1500)
     expected = feed.agg(F.count(F.lit(1)), F.max("change_seq")).collect()[0]
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
     committed = []
-    assert _jobs_in_group(spark, lambda: committed.append(sink.commit_batch(feed, 0))) == 1
-    assert committed == [True]
-    (rec,) = _manifest(sink)
+    assert _jobs_in_group(spark, lambda: committed.append(sink.commit_batch(feed))) == 1
+    assert committed == _manifest(sink)
+    (rec,) = committed
     assert rec["position"] == expected[1]
     assert sink.read_committed(spark).count() == expected[0]
+
+    # a batch overlapping the committed rows: the filter to rows past the
+    # position runs inside the same one job
+    more = log.filter(F.col("change_seq") < 3000)
+    total = more.agg(F.count(F.lit(1)), F.max("change_seq")).collect()[0]
+    assert _jobs_in_group(spark, lambda: committed.append(sink.commit_batch(more))) == 1
+    assert committed == _manifest(sink)
+    assert committed[1]["batch_id"] == 1
+    assert committed[1]["position"] == total[1]
+    assert sink.read_committed(spark).count() == total[0]
 
 
 def test_empty_batch_commits_nothing(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir)
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
-    assert sink.commit_batch(feed.filter(F.col("change_seq") < 100), 0)
+    assert sink.commit_batch(feed.filter(F.col("change_seq") < 100))
     before = open(sink.manifest_path).read()
-    assert sink.commit_batch(feed.filter(F.lit(False)), 1) is False
+    assert sink.commit_batch(feed.filter(F.lit(False))) is None
     assert open(sink.manifest_path).read() == before
     assert not os.path.exists(tmp_path / "out" / "_staging" / "batch=1")
     assert not os.path.exists(tmp_path / "out" / "data" / "batch=1")
-    # the id stays free: a later non-empty batch can still take it
-    assert sink.commit_batch(feed.filter(F.col("change_seq") >= 100), 1)
+    # the id stays free: a later non-empty batch takes it
+    assert sink.commit_batch(feed.filter(F.col("change_seq") >= 100))["batch_id"] == 1
     assert set(sink.committed_batches()) == {0, 1}
 
 
@@ -109,6 +120,93 @@ def test_stream_launches_one_job_per_micro_batch(spark, sf_dir, tmp_path):
     assert recs[-1]["position"] == feed.agg(F.max("change_seq")).collect()[0][0]
 
 
+def _write_log(path: str, n: int) -> None:
+    """A change log of ``n`` inserts with change_seq 0..n-1."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    seq = pa.array(range(n), pa.int64())
+    ops = pa.array([2] * n, pa.int32())
+    pq.write_table(pa.table({"__operation": ops, "change_seq": seq, "o_orderkey": seq}), path)
+
+
+def _drain(spark, path: str, ckpt, sink) -> None:
+    """Drain the log at ``path`` into ``sink`` through a ``cdc_change_feed``
+    stream checkpointed at ``ckpt``."""
+    spark.dataSource.register(ChangeFeedDataSource)
+    q = (
+        spark.readStream.format("cdc_change_feed")
+        .option("path", path)
+        .option("batchSize", 2000)
+        .load()
+        .withColumn("__tombstone", F.lit(False))
+        .writeStream.foreachBatch(foreach_batch_writer(sink))
+        .option("checkpointLocation", str(ckpt))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _seqs(spark, sink) -> list[int]:
+    return sorted(r[0] for r in sink.read_committed(spark).select("change_seq").collect())
+
+
+def test_stream_checkpoint_loss_commits_every_row_once(spark, tmp_path):
+    """The sink ignores Spark's batch ids: when the checkpoint is lost and
+    the source replans from the start, the replayed micro-batches are cut
+    to the rows past the manifest's position instead of being dropped (or
+    kept) whole by id."""
+    path = str(tmp_path / "feed.parquet")
+    ckpt = tmp_path / "ckpt"
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+
+    _write_log(path, 2500)
+    _drain(spark, path, ckpt, sink)
+    assert sink.last_progress() == 2499
+    _write_log(path, 6000)
+    shutil.rmtree(ckpt)
+    _drain(spark, path, ckpt, sink)
+
+    assert _seqs(spark, sink) == list(range(6000))
+    recs = _manifest(sink)
+    positions = [r["position"] for r in recs]
+    assert all(b > a for a, b in zip(positions, positions[1:]))
+    assert positions[-1] == 5999
+    ids = [r["batch_id"] for r in recs]
+    assert len(ids) == len(set(ids))
+
+
+def test_stream_reset_reingests_only_without_its_checkpoint(spark, tmp_path):
+    """A change_rows reset makes a stream re-ingest only once its checkpoint
+    is deleted too. Resumed from an intact checkpoint, the stream commits
+    only the rows past that checkpoint, so reads and compaction keep the
+    rows from before the reset; a fresh checkpoint re-reads the log, which
+    then supersedes them."""
+    path = str(tmp_path / "feed.parquet")
+    ckpt = tmp_path / "ckpt"
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    _write_log(path, 2500)
+    _drain(spark, path, ckpt, sink)
+
+    assert sink.reset_progress() == 1
+    _write_log(path, 6000)
+    _drain(spark, path, ckpt, sink)
+    assert _seqs(spark, sink) == list(range(6000))
+    assert sink.compact(spark, ["o_orderkey"]) == 6000
+    assert _seqs(spark, sink) == list(range(6000))
+
+    assert sink.reset_progress() == 1
+    shutil.rmtree(ckpt)
+    _drain(spark, path, ckpt, sink)
+    assert _seqs(spark, sink) == list(range(6000))
+    assert sink.compact(spark, ["o_orderkey"]) == 6000
+    assert _seqs(spark, sink) == list(range(6000))
+    assert len(os.listdir(os.path.join(sink.root, "data"))) == 1
+
+
 def test_pipeline_run_manifest_positions(spark, sf_dir, tmp_path):
     """Snapshot pages record None; each change batch records the max
     change_seq it holds — the positions separate max() jobs used to give."""
@@ -126,6 +224,25 @@ def test_pipeline_run_manifest_positions(spark, sf_dir, tmp_path):
     for rec in recs:
         data = spark.read.parquet(str(tmp_path / "out" / "data" / f"batch={rec['batch_id']}"))
         assert rec["position"] == data.agg(F.max("change_seq")).collect()[0][0]
+
+
+def test_snapshot_key_without_a_text_round_trip_raises(spark, sf_dir, tmp_path):
+    """Date and decimal snapshot key values are stored as text, which the
+    keyset seek casts back; a binary key has no such round trip, so its
+    commit raises instead of storing a string the seek would misread."""
+    import datetime
+    import decimal
+
+    page = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 10)
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    key = [datetime.date(2020, 1, 2), decimal.Decimal("1.50")]
+    assert sink.commit_batch(page, snapshot_key=key)
+    assert _manifest(sink)[-1]["snapshot_key"] == ["2020-01-02", "1.50"]
+    before = open(sink.manifest_path).read()
+    more = cdc_events(spark, sf_dir).filter(F.col("change_seq").between(10, 19))
+    with pytest.raises(TypeError):
+        sink.commit_batch(more, snapshot_key=[bytearray(b"k")])
+    assert open(sink.manifest_path).read() == before
 
 
 def _write_manifest(sink, text: str) -> None:
@@ -176,7 +293,7 @@ def test_manifest_writes_are_fsynced(spark, sf_dir, tmp_path, monkeypatch):
     monkeypatch.setattr(os, "replace", spy_replace)
     feed = cdc_events(spark, sf_dir).withColumn("__tombstone", F.lit(False))
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
-    assert sink.commit_batch(feed.filter(F.col("change_seq") < 100), 0)
+    assert sink.commit_batch(feed.filter(F.col("change_seq") < 100))
     st = os.stat(sink.manifest_path)
     assert events[-1] == ("fsync", st.st_ino, st.st_size)
 

@@ -27,10 +27,10 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
     n_feed = feed.count()
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
 
-    def write(batch, batch_id):
-        pos = batch.agg(F.max("change_seq")).collect()[0][0]
-        assert sink.commit_batch(batch, batch_id, pos)
-        return True
+    def write(batch):
+        rec = sink.commit_batch(batch)
+        assert rec
+        return rec
 
     mb = MicroBatcher(feed, sink, batch_size=400, commit=write)
     total = mb.run_to_completion()
@@ -43,9 +43,11 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
         F.sum("change_seq")
     ).collect()
 
-    # crash-replay: committing the same batch id again is a no-op
+    # crash-replay: committing rows the sink already holds is a no-op
     some_batch = out.limit(10)
-    assert not sink.commit_batch(some_batch, 0, position=-1)
+    before = open(sink.manifest_path).read()
+    assert sink.commit_batch(some_batch) is None
+    assert open(sink.manifest_path).read() == before
     assert sink.read_committed(spark).count() == n_feed
 
     # resume point = max committed index; a new batcher on the sink sees 0
@@ -56,19 +58,26 @@ def test_transactional_sink_exactly_once_and_resume(spark, sf_dir, tmp_path):
 
 
 def test_staged_but_uncommitted_batch_is_invisible(spark, sf_dir, tmp_path):
-    feed = cdc_events(spark, sf_dir).limit(100)
+    feed = cdc_events(spark, sf_dir)
+    first = feed.filter(F.col("change_seq") < 300)
+    n_first = first.count()
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
-    sink.commit_batch(feed, 0, position=99)
+    assert sink.commit_batch(first)["batch_id"] == 0
     # simulate a crash AFTER rename but BEFORE manifest append: write a
     # directory into data/ with no manifest record
-    feed.limit(5).write.mode("overwrite").parquet(str(tmp_path / "out/data/batch=1"))
-    assert sink.read_committed(spark).count() == 100  # phantom dir ignored
+    feed.filter(F.col("change_seq") >= 300).limit(5).write.mode("overwrite").parquet(
+        str(tmp_path / "out/data/batch=1")
+    )
+    assert sink.read_committed(spark).count() == n_first  # phantom dir ignored
     assert set(sink.committed_batches()) == {0}
-    # replay of the crashed batch id must supersede the phantom dir: the
-    # re-commit overwrites data/batch=1 and the manifest now records it
-    assert sink.commit_batch(feed.limit(7), 1, position=106)
+    # the next commit takes the crashed batch's id and supersedes the
+    # phantom dir: it overwrites data/batch=1 and the manifest records it
+    replay = feed.filter(F.col("change_seq") < 330)
+    n_new = replay.filter(F.col("change_seq") >= 300).count()
+    assert n_new > 0
+    assert sink.commit_batch(replay)["batch_id"] == 1
     assert set(sink.committed_batches()) == {0, 1}
-    assert sink.read_committed(spark).count() == 107
+    assert sink.read_committed(spark).count() == n_first + n_new
 
 
 def test_observed_metrics_and_reporters(spark, sf_dir, tmp_path):

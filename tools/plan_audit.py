@@ -283,7 +283,7 @@ MIXED_PERSIST_RELEASE_BY_CONTRACT: dict[str, str] = {
     "streaming/snapshot_stream.py:next_page": (
         "the empty-page branch releases the SAME cached `page` frame; a "
         "non-empty page is RETURNED cached and released by the caller "
-        "(streaming/pipeline_run.py:78, the audit's one net-negative "
+        "(streaming/pipeline_run.py:84, the audit's one net-negative "
         "function) after the commit drains it"
     ),
 }
