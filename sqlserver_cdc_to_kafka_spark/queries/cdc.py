@@ -684,6 +684,10 @@ def q_stream_snapshot_unified_drain(spark: SparkSession, sf_dir: str) -> DataFra
         pages.append(p)
     feed = cdc_events(spark, sf_dir)
     out = unified_feed(pages, feed)
+    # next_page returns each page cached; the union is a plan over the same
+    # deterministic pages, so its rows do not depend on the cache
+    for p in pages:
+        p.unpersist()
     return out.select(
         "__operation", "change_seq", "o_orderkey", "o_orderstatus", "o_totalprice"
     )

@@ -8,16 +8,19 @@ swaps the pyarrow scan for the `sources/jdbc_sql.change_window_sql` query)
 and exposes the change position as its STREAMING OFFSET:
 
 - offset = ``{"seq": <last emitted change_seq>}`` — the scalar form of the
-  ChangeIndex; Spark checkpoints it, giving T2 resume for free;
-- rate limiting (T3): each trigger advances at most ``batch_size`` rows past
-  the last planned offset — the reference's TOP(batch) pull;
-- ``partitions()`` plans each micro-batch's offset range as one input
-  partition, read by one Python worker. On a 4-core host a 4-way split of
-  the range drained sf0.1's 8 micro-batches of ~23.6k rows no faster
-  (warm drain median ~22 s split, ~19 s whole), and for micro-batches of a
-  few hundred rows it quadrupled the tasks;
-- ``read()`` runs ON EXECUTORS with no SparkSession: plain pyarrow over the
-  file, predicate pushed into the parquet scan.
+  ChangeIndex. Spark's offset log is the only copy of it: the reader keeps
+  no position of its own, and Spark checkpoints it, giving T2 resume;
+- rate limiting (T3): ``read(start)`` returns the rows in
+  ``(start, start + batchSize]`` that the log holds, and that end offset —
+  the reference's TOP(batch) pull past its last committed position;
+- it is a ``SimpleDataSourceStreamReader``: the read runs in the driver's
+  long-lived source runner when Spark asks for the latest offset, as plain
+  pyarrow over the file with the range pushed into the parquet scan, so a
+  micro-batch forks no executor Python worker. The runner holds only the
+  prefetched micro-batches Spark has not committed yet, each spanning at
+  most ``batchSize`` positions;
+- ``readBetweenOffsets`` serves Spark's replay of a micro-batch that was
+  planned but not committed before a restart (it runs on an executor).
 
 Usage:
     spark.dataSource.register(ChangeFeedDataSource)
@@ -30,11 +33,7 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceStreamReader,
-    InputPartition,
-)
+from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 _ARROW_TO_DDL = {
     "int64": "bigint",
@@ -64,24 +63,12 @@ def _arrow_field_ddl(field) -> str:
     raise ValueError(f"unmapped arrow type {t} for column {field.name}")
 
 
-class SeqRange(InputPartition):
-    def __init__(self, path: str, seq_col: str, lo: int, hi: int, columns: list):
-        self.path = path
-        self.seq_col = seq_col
-        self.lo = lo  # exclusive
-        self.hi = hi  # inclusive
-        self.columns = columns
-
-
-class ChangeFeedStreamReader(DataSourceStreamReader):
-    def __init__(self, schema_ddl_cols: list, options: dict) -> None:
+class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
+    def __init__(self, schema, options: dict) -> None:
         self.path = options["path"]
         self.seq_col = options.get("seqColumn", "change_seq")
         self.batch_size = int(options.get("batchSize", 2000))
-        self.columns = schema_ddl_cols
-        self._planned: int | None = None
-
-    # -- offset protocol ---------------------------------------------------
+        self.schema = schema
 
     def initialOffset(self) -> dict:
         return {"seq": -1}
@@ -114,49 +101,35 @@ class ChangeFeedStreamReader(DataSourceStreamReader):
             return -1
         return pc.max(t.column(self.seq_col)).as_py()
 
-    def latestOffset(self) -> dict:
-        """T3 rate limit: advance ≤ batch_size sequence numbers per trigger
-        past the last planned end (dense fixture seqs make rows ≈ seqs; a
-        sparse log simply under-fills some batches)."""
-        avail = self._available_max()
-        base = self._planned if self._planned is not None else -1
-        end = min(avail, base + self.batch_size)
-        if end < base:
-            end = base
-        self._planned = end
-        return {"seq": end}
+    def read(self, start: dict) -> tuple[Iterator, dict]:
+        """T3 rate limit: advance ≤ batch_size sequence numbers past
+        ``start`` (dense fixture seqs make rows ≈ seqs; a sparse log simply
+        under-fills some batches)."""
+        lo = start["seq"]
+        end = {"seq": max(lo, min(self._available_max(), lo + self.batch_size))}
+        return self.readBetweenOffsets(start, end), end
 
-    def commit(self, end: dict) -> None:
-        # checkpointed by Spark; fast-forward planning after a restart replay
-        if self._planned is None or end["seq"] > self._planned:
-            self._planned = end["seq"]
-
-    # -- per-batch planning + executor reads -------------------------------
-
-    def partitions(self, start: dict, end: dict) -> list:
+    def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
         lo, hi = start["seq"], end["seq"]
-        if self._planned is None or hi > self._planned:
-            self._planned = hi  # restart fast-forward
-        return [SeqRange(self.path, self.seq_col, lo, max(lo, hi), self.columns)]
-
-    def read(self, partition: SeqRange) -> Iterator[tuple]:
-        if partition.hi <= partition.lo:
-            return
+        if hi <= lo:
+            return iter([])
         import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
 
         table = pq.read_table(
-            partition.path,
-            columns=partition.columns,
-            filters=[
-                (partition.seq_col, ">", partition.lo),
-                (partition.seq_col, "<=", partition.hi),
-            ],
+            self.path,
+            columns=self.schema.names,
+            filters=[(self.seq_col, ">", lo), (self.seq_col, "<=", hi)],
         )
         # r15 (guide §4): hand Spark Arrow record batches instead of Python
         # row tuples — the r14 form round-tripped every value through a
         # Python object (to_pylist + per-row zip) before the worker
-        # re-serialized it, the whole-feed JVM↔Python boundary cost.
-        yield from table.select(partition.columns).to_batches()
+        # re-serialized it, the whole-feed JVM↔Python boundary cost. The
+        # driver-side runner requires Spark's Arrow schema exactly,
+        # nullability included, hence the cast. A list iterator, not a
+        # generator: Spark copy.copy()s the prefetched iterator it caches.
+        table = table.select(self.schema.names).cast(to_arrow_schema(self.schema))
+        return iter(table.to_batches())
 
 
 class ChangeFeedDataSource(DataSource):
@@ -170,5 +143,5 @@ class ChangeFeedDataSource(DataSource):
         sch = pq.read_schema(self.options["path"])
         return ", ".join(f"{f.name} {_arrow_field_ddl(f)}" for f in sch)
 
-    def streamReader(self, schema) -> ChangeFeedStreamReader:
-        return ChangeFeedStreamReader([f.name for f in schema.fields], self.options)
+    def simpleStreamReader(self, schema) -> ChangeFeedStreamReader:
+        return ChangeFeedStreamReader(schema, self.options)

@@ -76,8 +76,10 @@ class PipelineRun:
                 rows = snapshot_rows(page, self.change_feed)
                 # on the feed's types, as all the sink's batches (the read time too)
                 cast = [F.col(c).cast(self.change_feed.schema[c].dataType) for c in rows.columns]
-                self._commit(rows.select(*cast, F.lit(False).alias("__tombstone")), snap.last_key)
-                page.unpersist()
+                try:
+                    self._commit(rows.select(*cast, F.lit(False).alias("__tombstone")), snap.last_key)
+                finally:
+                    page.unpersist()
             emitted = mb.run_once()
             if snap.completed and emitted < self.batch_size:
                 return self.rows_committed

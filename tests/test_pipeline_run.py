@@ -197,6 +197,21 @@ def test_crash_between_data_rename_and_manifest_append(
     assert len(ids) == len(set(ids)) == len(CRASH_POINTS)
 
 
+def test_failed_snapshot_commit_releases_its_page(spark, sf_dir, tmp_path):
+    """A commit that raises on the first snapshot page leaves no page
+    cached for the rest of the session."""
+    _, _, sink, _, run = _setup(spark, sf_dir, tmp_path)
+
+    def commit_batch(*args, **kwargs):
+        raise Crash
+
+    sink.commit_batch = commit_batch
+    before = spark.sparkContext._jsc.getPersistentRDDs().size()
+    with pytest.raises(Crash):
+        run.run()
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == before
+
+
 def test_date_keyed_snapshot_resumes_after_crash(spark, tmp_path):
     """A snapshot key JSON has no type for (a date) is stored so that the
     resumed run's keyset seek restores it: a crash after the first page

@@ -88,6 +88,19 @@ def test_unified_feed_carries_both_snapshot_and_changes(spark, sf_dir):
     assert unified.count() == 150
 
 
+def test_snapshot_unified_drain_witness_releases_its_pages(spark, sf_dir):
+    """The T7 witness drains every keyset page, each cached by next_page,
+    and leaves none of them cached; its union still holds every row."""
+    from sqlserver_cdc_to_kafka_spark.queries.cdc import q_stream_snapshot_unified_drain
+
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    out = q_stream_snapshot_unified_drain(spark, sf_dir)
+    assert persisted().size() == before
+    orders = load_table(spark, sf_dir, "orders")
+    assert out.count() == orders.count() + cdc_events(spark, sf_dir).count()
+
+
 def test_streaming_windowed_counts_match_batch(spark, sf_dir):
     ev_stream = read_events_stream(spark, sf_dir)
     run_stream_to_memory(windowed_counts(ev_stream), "win_out")

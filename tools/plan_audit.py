@@ -282,9 +282,11 @@ MIXED_PERSIST_RELEASE_BY_CONTRACT: dict[str, str] = {
     ),
     "streaming/snapshot_stream.py:next_page": (
         "the empty-page branch releases the SAME cached `page` frame; a "
-        "non-empty page is RETURNED cached and released by the caller "
-        "(streaming/pipeline_run.py:84, the audit's one net-negative "
-        "function) after the commit drains it"
+        "non-empty page is RETURNED cached and released by the caller, "
+        "a net-negative function: streaming/pipeline_run.py:82 in a "
+        "`finally` after the commit drains it (or raises), and "
+        "queries/cdc.py:q_stream_snapshot_unified_drain once its union "
+        "plan is built"
     ),
 }
 
