@@ -681,13 +681,11 @@ def q_stream_snapshot_unified_drain(spark: SparkSession, sf_dir: str) -> DataFra
     pager = SnapshotStream(orders, ["o_orderkey"], batch_size=page_rows)
     pages = []
     while (p := pager.next_page()) is not None:
+        # a page's key comes from an Observation on the action that runs it
+        p.write.format("noop").mode("overwrite").save()
+        pager.page_key()
         pages.append(p)
-    feed = cdc_events(spark, sf_dir)
-    out = unified_feed(pages, feed)
-    # next_page returns each page cached; the union is a plan over the same
-    # deterministic pages, so its rows do not depend on the cache
-    for p in pages:
-        p.unpersist()
+    out = unified_feed(pages, cdc_events(spark, sf_dir))
     return out.select(
         "__operation", "change_seq", "o_orderkey", "o_orderstatus", "o_totalprice"
     )

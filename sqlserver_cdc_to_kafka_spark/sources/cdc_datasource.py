@@ -10,13 +10,15 @@ and exposes the change position as its STREAMING OFFSET:
 - offset = ``{"seq": <last emitted change_seq>}`` — the scalar form of the
   ChangeIndex. Spark's offset log is the only copy of it: the reader keeps
   no position of its own, and Spark checkpoints it, giving T2 resume;
-- rate limiting (T3): ``read(start)`` returns the rows in
-  ``(start, start + batchSize]`` that the log holds, and that end offset —
-  the reference's TOP(batch) pull past its last committed position;
+- rate limiting (T3): ``read(start)`` returns the rows in the
+  ``batchSize`` positions from the first ``change_seq`` past ``start``, and
+  the last position it read as the end offset — the reference's TOP(batch)
+  pull past its last committed position. A gap in the log costs no empty
+  micro-batch;
 - it is a ``SimpleDataSourceStreamReader``: the read runs in the driver's
   long-lived source runner when Spark asks for the latest offset, as plain
-  pyarrow over the file with the range pushed into the parquet scan, so a
-  micro-batch forks no executor Python worker. The runner holds only the
+  pyarrow over the row groups whose footer statistics reach into the range,
+  so a micro-batch forks no executor Python worker. The runner holds only the
   prefetched micro-batches Spark has not committed yet, each spanning at
   most ``batchSize`` positions;
 - ``readBetweenOffsets`` serves Spark's replay of a micro-batch that was
@@ -35,32 +37,16 @@ from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
-_ARROW_TO_DDL = {
-    "int64": "bigint",
-    "int32": "int",
-    "int16": "smallint",
-    "int8": "tinyint",
-    "double": "double",
-    "float": "float",
-    "string": "string",
-    "large_string": "string",
-    "bool": "boolean",
-    "binary": "binary",
-    "date32[day]": "date",
-}
 
+def _int64(value: int):
+    """An Arrow int64 scalar built from its bytes. pyarrow turns a Python
+    value into Arrow data (``pa.scalar``, a bare int in ``pc.greater``, a
+    ``filters=`` read) only after importing pandas, about 0.2–0.3 s of CPU
+    in each fresh source runner, and Spark starts one per stream query."""
+    import pyarrow as pa
 
-def _arrow_field_ddl(field) -> str:
-    t = str(field.type)
-    if t in _ARROW_TO_DDL:
-        return _ARROW_TO_DDL[t]
-    if t.startswith("timestamp"):
-        return "timestamp_ntz" if "tz=" not in t else "timestamp"
-    if t.startswith(("list<", "large_list<")) and "string" in t:
-        return "array<string>"
-    if t.startswith("decimal128"):
-        return t.replace("decimal128", "decimal")
-    raise ValueError(f"unmapped arrow type {t} for column {field.name}")
+    data = pa.py_buffer(value.to_bytes(8, "little", signed=True))
+    return pa.Array.from_buffers(pa.int64(), 1, [None, data])[0]
 
 
 class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
@@ -73,63 +59,74 @@ class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"seq": -1}
 
-    def _available_max(self) -> int:
-        # r15 (guide §6): the driver polls this every trigger — read the
-        # parquet FOOTER's row-group statistics for the max instead of
-        # scanning the whole sequence column per poll (statistics are exact
-        # for the file; a stats-less file falls back to the column scan).
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(self.path)
-        md = pf.metadata
-        if md.num_rows == 0:
-            return -1
+    def _row_groups(self, pf) -> list[tuple[int, int | None, int | None]]:
+        """Each row group with the (min, max) of its sequence column from
+        the footer statistics, or (None, None) when it has none (r15: the
+        driver reads footers per trigger, not the sequence column)."""
         idx = pf.schema_arrow.get_field_index(self.seq_col)
-        mx = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(idx).statistics
-            if st is None or not st.has_min_max:
-                mx = None
-                break
-            mx = st.max if mx is None else max(mx, st.max)
-        if mx is not None:
-            return int(mx)
+        groups = []
+        for rg in range(pf.metadata.num_row_groups):
+            st = pf.metadata.row_group(rg).column(idx).statistics
+            stats = st is not None and st.has_min_max
+            groups.append((rg, st.min if stats else None, st.max if stats else None))
+        return groups
+
+    def _rows(self, pf, groups, lo: int, hi: int | None, columns: list[str]):
+        """The rows with ``lo < seq <= hi`` (no upper bound when ``hi`` is
+        None), read only from the row groups whose statistics reach into
+        that range and filtered with ``pyarrow.compute``."""
         import pyarrow.compute as pc
 
-        t = pq.read_table(self.path, columns=[self.seq_col])
-        if t.num_rows == 0:
-            return -1
-        return pc.max(t.column(self.seq_col)).as_py()
+        table = pf.read_row_groups(
+            [rg for rg, mn, mx in groups if mx is None or (mx > lo and (hi is None or mn <= hi))],
+            columns=columns,
+        )
+        seq = table.column(self.seq_col)
+        keep = pc.greater(seq, _int64(lo))
+        if hi is not None:
+            keep = pc.and_(keep, pc.less_equal(seq, _int64(hi)))
+        return table.filter(keep)
+
+    def _batches(self, table) -> Iterator:
+        # r15 (guide §4): hand Spark Arrow record batches instead of Python
+        # row tuples. The driver-side runner requires Spark's Arrow schema
+        # exactly, nullability included, hence the cast. A list iterator,
+        # not a generator: Spark copy.copy()s the prefetched iterator it
+        # caches.
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        return iter(table.cast(to_arrow_schema(self.schema)).to_batches())
 
     def read(self, start: dict) -> tuple[Iterator, dict]:
-        """T3 rate limit: advance ≤ batch_size sequence numbers past
-        ``start`` (dense fixture seqs make rows ≈ seqs; a sparse log simply
-        under-fills some batches)."""
+        """T3 rate limit: the rows in the ``batchSize`` positions from the
+        first ``change_seq`` past ``start``, so a gap in the log costs no
+        empty micro-batch. The end offset is the last position read."""
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
         lo = start["seq"]
-        end = {"seq": max(lo, min(self._available_max(), lo + self.batch_size))}
-        return self.readBetweenOffsets(start, end), end
+        pf = pq.ParquetFile(self.path)
+        groups = self._row_groups(pf)
+        # a group's minimum is its first position past lo, unless lo falls
+        # inside the group (or it has no statistics): then read its positions
+        inside = [g for g in groups if g[1] is None or g[1] <= lo < g[2]]
+        seq = self._rows(pf, inside, lo, None, [self.seq_col]).column(self.seq_col)
+        firsts = [pc.min(seq).as_py(), *(mn for _, mn, _ in groups if mn is not None and mn > lo)]
+        firsts = [s for s in firsts if s is not None]
+        if not firsts:
+            return iter([]), start
+        table = self._rows(pf, groups, lo, min(firsts) + self.batch_size - 1, self.schema.names)
+        end = {"seq": pc.max(table.column(self.seq_col)).as_py()}
+        return self._batches(table), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:
+        import pyarrow.parquet as pq
+
         lo, hi = start["seq"], end["seq"]
         if hi <= lo:
             return iter([])
-        import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-
-        table = pq.read_table(
-            self.path,
-            columns=self.schema.names,
-            filters=[(self.seq_col, ">", lo), (self.seq_col, "<=", hi)],
-        )
-        # r15 (guide §4): hand Spark Arrow record batches instead of Python
-        # row tuples — the r14 form round-tripped every value through a
-        # Python object (to_pylist + per-row zip) before the worker
-        # re-serialized it, the whole-feed JVM↔Python boundary cost. The
-        # driver-side runner requires Spark's Arrow schema exactly,
-        # nullability included, hence the cast. A list iterator, not a
-        # generator: Spark copy.copy()s the prefetched iterator it caches.
-        table = table.select(self.schema.names).cast(to_arrow_schema(self.schema))
-        return iter(table.to_batches())
+        pf = pq.ParquetFile(self.path)
+        return self._batches(self._rows(pf, self._row_groups(pf), lo, hi, self.schema.names))
 
 
 class ChangeFeedDataSource(DataSource):
@@ -140,8 +137,9 @@ class ChangeFeedDataSource(DataSource):
     def schema(self) -> str:
         import pyarrow.parquet as pq
 
-        sch = pq.read_schema(self.options["path"])
-        return ", ".join(f"{f.name} {_arrow_field_ddl(f)}" for f in sch)
+        from sqlserver_cdc_to_kafka_spark.tables import arrow_schema_ddl
+
+        return arrow_schema_ddl(pq.read_schema(self.options["path"]))
 
     def simpleStreamReader(self, schema) -> ChangeFeedStreamReader:
         return ChangeFeedStreamReader(schema, self.options)

@@ -91,17 +91,22 @@ class MicroBatcher:
     # when None
     commit: Callable[[DataFrame], object] | None = None
 
-    def run_once(self) -> int:
-        """One trigger: poll → commit. Returns the rows polled, 0 when the
-        feed holds nothing past the committed position. A full batch (==
-        batch_size) signals a lagging table: the caller should immediately
-        re-trigger (T3) instead of waiting the poll interval. The rows are
-        counted by an Observation on the commit's own write, so polling
-        costs no job of its own."""
+    def run_once(self, snapshot: DataFrame | None = None) -> int:
+        """One trigger: poll → commit, with the ``snapshot`` rows (on the
+        feed's columns) in the same commit when given (T7: a snapshot page
+        and a change batch share one write and one manifest record).
+        Returns the change rows polled, 0 when the feed holds nothing past
+        the committed position. A full batch (== batch_size) signals a
+        lagging table: the caller should immediately re-trigger (T3)
+        instead of waiting the poll interval. The rows are counted by an
+        Observation on the commit's own write, so polling costs no job of
+        its own."""
         obs = Observation()
         batch = poll_window(
             self.feed, self.sink.last_progress(), self.idx_col, self.batch_size
         ).observe(obs, F.count(F.lit(1)).alias("rows"))
+        if snapshot is not None:
+            batch = batch.unionByName(snapshot)
         commit = self.commit or self.sink.commit_batch
         if not commit(batch):
             return 0

@@ -1,9 +1,12 @@
 """End-to-end pipeline run — the reference's hot loop (§3.1, main.py:203-353)
 composed from the engine's parts:
 
-per cycle: snapshot pages interleave with change micro-batches (T7) →
-tombstones appended after deletes (T6) → batch + progress committed together
-(T2, manifest transaction) → metrics observed in-job and reported (A9/X2) →
+per trigger: the next snapshot page joins the next change micro-batch (T7) →
+tombstones appended after deletes (T6) → both, with their progress,
+committed in ONE write and one manifest record (T2, manifest transaction;
+the page's key and row count are observed on that write, so a trigger is
+one Spark job over scan-only inputs) → metrics observed in-job and reported
+(A9/X2) →
 self-validation over the engine's own committed output (§5's validators as
 product).
 
@@ -56,8 +59,12 @@ class PipelineRun:
     def run(self) -> int:
         """Interleave snapshot pages with change micro-batches, as the
         reference fills the gap between CDC polls with snapshot work
-        (main.py:214-267), resuming from the sink's manifest. Returns total
-        rows committed (snapshot rows + change rows + tombstones)."""
+        (main.py:214-267), resuming from the sink's manifest. Each trigger
+        is one write: the next snapshot page and the next change batch
+        commit together, under one manifest record that carries both the
+        page's key (observed on that write) and the change position.
+        Returns total rows committed (snapshot rows + change rows +
+        tombstones)."""
         snap = SnapshotStream(
             self.source_table,
             self.key_cols,
@@ -68,28 +75,29 @@ class PipelineRun:
             self.change_feed,
             self.sink,
             batch_size=self.batch_size,
-            commit=lambda batch: self._commit(with_tombstones(batch, self.key_cols)),
+            commit=lambda batch: self._commit(
+                with_tombstones(batch, self.key_cols), snapshot_key=snap.page_key
+            ),
         )
         while True:
             page = snap.next_page()
-            if page is not None:
-                rows = snapshot_rows(page, self.change_feed)
-                # on the feed's types, as all the sink's batches (the read time too)
-                cast = [F.col(c).cast(self.change_feed.schema[c].dataType) for c in rows.columns]
-                try:
-                    self._commit(rows.select(*cast, F.lit(False).alias("__tombstone")), snap.last_key)
-                finally:
-                    page.unpersist()
-            emitted = mb.run_once()
+            emitted = mb.run_once(None if page is None else self._snapshot_rows(page))
             if snap.completed and emitted < self.batch_size:
                 return self.rows_committed
 
     # -- internals ---------------------------------------------------------
 
+    def _snapshot_rows(self, page: DataFrame) -> DataFrame:
+        # on the feed's types, as all the sink's batches (the read time too)
+        rows = snapshot_rows(page, self.change_feed)
+        return rows.select(
+            *[F.col(c).cast(self.change_feed.schema[c].dataType) for c in rows.columns]
+        )
+
     def _commit(self, batch: DataFrame, snapshot_key=None) -> int:
         observed, obs = observed_batch(batch)
         t0 = time.time()
-        # one job: the write fulfils both the metrics Observation and the
+        # one write: it fulfils the metrics Observation, the page's and the
         # sink's, which supplies the manifest position
         record = self.sink.commit_batch(observed, snapshot_key=snapshot_key)
         if record is None:

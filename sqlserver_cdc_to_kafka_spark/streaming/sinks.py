@@ -19,9 +19,12 @@ for a transactional producer gives the Kafka version):
    rows and takes ``max(change_seq)`` — the batch is scanned once;
 2. if the write observed no rows, drop the stage directory and commit
    nothing; otherwise atomically rename it into place;
-3. append the progress record ``(topic, kind, position, batch_id)`` to the
-   manifest and fsync it, the position being the observed
-   ``max(change_seq)`` — readers only see directories listed in the
+3. append the progress record ``(topic, kind, position, batch_id,
+   snapshot_key)`` to the manifest and fsync it, the position being the
+   observed ``max(change_seq)``. A ``PipelineRun`` trigger writes its
+   snapshot page and its change batch together, so its one record holds
+   both the page's key (observed on the same write) and the change
+   position — readers only see directories listed in the
    manifest, so a crash between 2 and 3 is invisible (the next commit takes
    the same id over it). Replays are deduped by position: step 1 writes
    only rows whose ``change_seq`` is null (snapshot rows, tombstones) or
@@ -47,6 +50,9 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from sqlserver_cdc_to_kafka_spark.tables import first_data_file
 
 
 def _key_text(value) -> str:
@@ -55,6 +61,18 @@ def _key_text(value) -> str:
     if isinstance(value, (datetime.date, decimal.Decimal)):
         return str(value)
     raise TypeError(f"cannot store snapshot key value {value!r} in the manifest")
+
+
+def _spark_footer_schema(data_dir: str) -> T.StructType | None:
+    """The Spark schema Spark stores in the footer of each parquet file it
+    writes (``org.apache.spark.sql.parquet.row.metadata``), read from the
+    first file of ``data_dir``; None for a file without one. Spark's own
+    ``readSchemaFromFooter`` prefers the same schema."""
+    import pyarrow.parquet as pq
+
+    meta = pq.read_metadata(first_data_file(data_dir)).metadata or {}
+    stored = meta.get(b"org.apache.spark.sql.parquet.row.metadata")
+    return None if stored is None else T.StructType.fromJson(json.loads(stored))
 
 
 @dataclass
@@ -168,7 +186,10 @@ class TransactionalDirSink:
 
         An Observation on the write gives the row count and the record's
         ``first``/``position`` (min/max ``change_seq``: ``None`` for a
-        snapshot page, which passes its last key as ``snapshot_key``)."""
+        batch of snapshot rows only). ``snapshot_key`` is the key the
+        batch's snapshot page ends at, or a function the sink calls once
+        the write has run, so that an Observation on the page can give it
+        (``SnapshotStream.page_key``)."""
         records = self._records()
         position = self._progress(records, "change_rows", "position")
         batch_id = self._next_id(records)
@@ -187,6 +208,8 @@ class TransactionalDirSink:
             F.max("change_seq").alias("pos"),
         ).write.mode("overwrite").parquet(stage)
         observed = obs.get
+        if callable(snapshot_key):
+            snapshot_key = snapshot_key()
         if not observed["rows"]:
             shutil.rmtree(stage)
             return None
@@ -241,7 +264,9 @@ class TransactionalDirSink:
     def read_committed(self, spark: SparkSession, as_of: int | None = None) -> DataFrame:
         """Read ONLY manifest-listed data, less what a reset's re-ingest
         superseded (see ``_visible``). Records may carry an explicit
-        ``path`` (compacted generations).
+        ``path`` (compacted generations). The schema is the one Spark
+        stores in the first file's footer, which Spark's own inference
+        would also take, so the read launches no schema-inference job.
 
         ``as_of``: time travel — read the table as it was after batch id
         ``as_of`` committed (later batches invisible). Compaction collapses
@@ -252,7 +277,10 @@ class TransactionalDirSink:
         batches = self._visible(records)
         if not batches:
             raise ValueError("no committed batches" + (f" at or before {as_of}" if as_of is not None else ""))
-        return spark.read.parquet(*map(self._data_dir, batches))
+        dirs = [self._data_dir(rec) for rec in batches]
+        schema = _spark_footer_schema(dirs[0])
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        return reader.parquet(*dirs)
 
     def compact(
         self,

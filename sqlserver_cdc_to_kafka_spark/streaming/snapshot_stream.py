@@ -9,14 +9,17 @@ double-read and no gap. Snapshot rows carry op=Snapshot and NULL LSN.
 Spark restatement: the snapshot is a bounded keyset-paged stream interleaved
 with the change micro-batches; both unify on the envelope schema via
 ``unionByName``. This module drives that interleave in pull mode (the
-foreachBatch shape)."""
+foreachBatch shape): a page is a lazy keyset query that its consumer runs
+(``PipelineRun`` writes it in the same job as a change batch), and an
+Observation on that run gives the page's row count and resume key, so
+paging caches nothing and adds no Spark job."""
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.sources.snapshot import snapshot_envelope, snapshot_page
@@ -33,33 +36,43 @@ class SnapshotStream:
     batch_size: int = 2000
     last_key: Sequence | None = None
     completed: bool = False
+    _seen: Observation | None = field(default=None, repr=False)
 
     def next_page(self) -> DataFrame | None:
-        """None once the table is exhausted (snapshot-completed sentinel,
-        constants.py:35).
+        """The next page, not yet run; None once the table is exhausted
+        (snapshot-completed sentinel, constants.py:35).
 
-        The resume key is a one-row aggregate (``min(struct(key_cols))`` —
-        the page scans high→low, so its minimum key is the last row emitted);
-        the page itself never leaves the executors. Collecting the whole
-        2,000-row page to read one key would be a driver-memory risk with
-        wide/blob rows."""
+        The page is observed: the action that runs it (a pipeline trigger's
+        one write) also counts its rows and takes ``min(struct(key_cols))``
+        — the page scans high→low, so that is the last row emitted — and
+        ``page_key`` reads them afterwards. So the pager caches nothing and
+        runs no job of its own, and the page never leaves the executors.
+        Run each page and take its ``page_key`` before asking for the next
+        one."""
+        if self._seen is not None:
+            raise RuntimeError("run the last page and take its page_key() first")
         if self.completed:
             return None
-        page = snapshot_page(
-            self.source, self.key_cols, self.last_key, self.batch_size
-        ).cache()
-        summary = page.agg(
-            F.count("*").alias("n"),
+        self._seen = Observation()
+        return snapshot_page(self.source, self.key_cols, self.last_key, self.batch_size).observe(
+            self._seen,
+            F.count(F.lit(1)).alias("n"),
             F.min(F.struct(*self.key_cols)).alias("low_key"),
-        ).collect()[0]
-        if summary["n"] == 0:
-            page.unpersist()
-            self.completed = True
+        )
+
+    def page_key(self) -> tuple | None:
+        """After the action that ran the last page: the key it ended at, the
+        resume key, or None when it was empty or no page is pending (waits
+        for that action's observed metrics). A page short of ``batch_size``
+        completes the stream."""
+        if self._seen is None:
+            return None
+        summary, self._seen = self._seen.get, None
+        self.completed = summary["n"] < self.batch_size
+        if not summary["n"]:
             return None
         self.last_key = tuple(summary["low_key"][c] for c in self.key_cols)
-        if summary["n"] < self.batch_size:
-            self.completed = True
-        return page
+        return self.last_key
 
 
 def snapshot_rows(page: DataFrame, feed: DataFrame) -> DataFrame:

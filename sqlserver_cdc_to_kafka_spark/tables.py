@@ -7,6 +7,8 @@ LLM-pipeline operators.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 
 TABLES = [
@@ -25,9 +27,61 @@ TABLES = [
 DEFAULT_SF_DIR = "/root/testdata/sf0.001"
 
 
+_ARROW_TO_DDL = {
+    "int64": "bigint",
+    "int32": "int",
+    "int16": "smallint",
+    "int8": "tinyint",
+    "double": "double",
+    "float": "float",
+    "string": "string",
+    "large_string": "string",
+    "bool": "boolean",
+    "binary": "binary",
+    "date32[day]": "date",
+}
+
+
+def arrow_type_ddl(t) -> str:
+    """The Spark SQL type a parquet column of Arrow type ``t`` reads as: a
+    nanosecond timestamp is ``bigint``, as ``nanosAsLong`` reads it, and a
+    timestamp without a time zone is ``timestamp_ntz``."""
+    import pyarrow as pa
+
+    if pa.types.is_timestamp(t):
+        if t.unit == "ns":
+            return "bigint"
+        return "timestamp" if t.tz else "timestamp_ntz"
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        return f"array<{arrow_type_ddl(t.value_type)}>"
+    if pa.types.is_decimal(t):
+        return f"decimal({t.precision},{t.scale})"
+    if str(t) in _ARROW_TO_DDL:
+        return _ARROW_TO_DDL[str(t)]
+    raise ValueError(f"unmapped arrow type {t}")
+
+
+def arrow_schema_ddl(schema) -> str:
+    """A DDL schema string for a parquet footer's Arrow ``schema``."""
+    return ", ".join(f"`{f.name}` {arrow_type_ddl(f.type)}" for f in schema)
+
+
+def first_data_file(path: str) -> str:
+    """``path`` itself, or a directory table's first data file (its files
+    share one schema, as Spark's schema inference assumes)."""
+    if not os.path.isdir(path):
+        return path
+    return os.path.join(
+        path, min(f for f in os.listdir(path) if not f.startswith(("_", ".")))
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan with Catalyst pushdown/pruning intact — never wrap this
     in anything that would block filter pushdown to the parquet reader.
+
+    The schema comes from the parquet footer (``arrow_schema_ddl``), so the
+    read launches no schema-inference job.
 
     ``events.ts`` dtype varies by testdata vintage: today it is parquet
     TIMESTAMP micros (Spark reads TIMESTAMP or TIMESTAMP_NTZ); historically
@@ -35,8 +89,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     micros) surfaces as LongType epoch-nanos. NEVER assume one form — always
     go through ``functions.datetime_fns`` (epoch_micros / as_event_time),
     which dispatches on the actual column dtype."""
+    import pyarrow.parquet as pq
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    ddl = arrow_schema_ddl(pq.read_schema(first_data_file(path)))
+    return spark.read.schema(ddl).parquet(path)
 
 
 def ensure_parallel(df: DataFrame, min_partitions: int | None = None) -> DataFrame:

@@ -76,15 +76,13 @@ def test_pipeline_mode_matches_paged_snapshot(spark, sf_dir, tmp_path, capsys,
     )
     pages = []
     while (p := pager.next_page()) is not None:
+        p.count()  # run the page: its key comes from an Observation on the run
+        pager.page_key()
         pages.append(p)
-    try:
-        expected = unified_feed(pages, cdc_events(spark, sf_dir))
-        assert _rows_without_event_time(written) == _rows_without_event_time(
-            expected.select(*written.columns)
-        )
-    finally:
-        for p in pages:
-            p.unpersist()
+    expected = unified_feed(pages, cdc_events(spark, sf_dir))
+    assert _rows_without_event_time(written) == _rows_without_event_time(
+        expected.select(*written.columns)
+    )
 
 
 def test_tombstone_disable_flag(spark, sf_dir, tmp_path, capsys):

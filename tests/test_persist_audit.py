@@ -82,5 +82,4 @@ def test_mixed_persist_release_set_is_pinned():
         "operators/selection.py:exact_group_kth",
         "pipeline/components.py:connected_components_star",
         "queries/pipeline6.py:q_coreset_fps",
-        "streaming/snapshot_stream.py:next_page",
     }

@@ -137,7 +137,7 @@ def test_pipeline_resume_after_crash(spark, sf_dir, tmp_path):
     assert sink3.read_committed(spark).count() == n_total
 
 
-CRASH_POINTS = range(1, 7)
+CRASH_POINTS = range(1, 4)
 
 
 @pytest.fixture(scope="module")
@@ -145,8 +145,8 @@ def uninterrupted(spark, sf_dir, tmp_path_factory):
     """The committed rows of a run that is never interrupted (batch 700)."""
     _, _, sink, _, run = _setup(spark, sf_dir, tmp_path_factory.mktemp("whole"))
     run.run()
-    # 3 snapshot pages and 3 change batches at sf0.001: CRASH_POINTS covers
-    # a crash after every commit
+    # 3 commits at sf0.001, each a snapshot page with a change batch:
+    # CRASH_POINTS covers a crash after every commit
     assert len(sink.committed_batches()) == len(CRASH_POINTS)
     return _committed_rows(spark, sink)
 
@@ -168,13 +168,15 @@ def test_crash_after_commit_k_resumes_exactly_once(
     assert len(ids) == len(set(ids)) == len(CRASH_POINTS)
 
 
-@pytest.mark.parametrize("n", [2, 3], ids=["change_batch", "snapshot_page"])
+@pytest.mark.parametrize("n", [2, 3], ids=["full_page", "last_page"])
 def test_crash_between_data_rename_and_manifest_append(
     spark, sf_dir, tmp_path, uninterrupted, n
 ):
     """The n-th commit dies after its data directory is renamed into place
     but before its manifest record is appended: the directory is invisible,
-    and the resumed run commits the same batch id over it."""
+    and the resumed run commits the same batch id over it. Commit 2 holds a
+    full snapshot page, commit 3 the short last one (it completes the
+    snapshot); each holds a change batch too."""
     _, _, sink, _, run = _setup(spark, sf_dir, tmp_path)
     append, calls = sink._append, []
 
@@ -238,8 +240,10 @@ def test_date_keyed_snapshot_resumes_after_crash(spark, tmp_path):
         crashing.run()
     assert len(_manifest_ids(sink)) == 1
 
+    left = 1200 + 50 - sink.read_committed(spark).count()  # the rows the crash left
+    assert left == 1200 - 500  # the first commit held page 1 and all 50 changes
     sink, resumed = run()
-    assert resumed.run() == 1200 - 500 + 50
+    assert resumed.run() == left
     got = Counter(
         tuple(r) for r in sink.read_committed(spark).select("__operation", "d", "v").collect()
     )
@@ -247,7 +251,7 @@ def test_date_keyed_snapshot_resumes_after_crash(spark, tmp_path):
     want.update(tuple(r) for r in feed.select("__operation", "d", "v").collect())
     assert got == want
     ids = _manifest_ids(sink)
-    assert len(ids) == len(set(ids)) == 4
+    assert len(ids) == len(set(ids)) == 3  # pages of 500, 500 and 200 rows
 
 
 def test_rerun_after_compaction_commits_nothing(spark, sf_dir, tmp_path):

@@ -208,8 +208,9 @@ def test_stream_reset_reingests_only_without_its_checkpoint(spark, tmp_path):
 
 
 def test_pipeline_run_manifest_positions(spark, sf_dir, tmp_path):
-    """Snapshot pages record None; each change batch records the max
-    change_seq it holds — the positions separate max() jobs used to give."""
+    """Each trigger's record carries both the key its snapshot page ended at
+    (observed on the commit's write) and the max change_seq its change
+    batch holds; once the snapshot is done, records carry a position only."""
     orders = load_table(spark, sf_dir, "orders")
     feed = cdc_events(spark, sf_dir)
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
@@ -218,12 +219,45 @@ def test_pipeline_run_manifest_positions(spark, sf_dir, tmp_path):
     seqs = sorted(r[0] for r in feed.select("change_seq").collect())
     # change batches poll the log in change_seq order, 700 rows at a time
     want = [seqs[min(i + 700, len(seqs)) - 1] for i in range(0, len(seqs), 700)]
-    assert [r["position"] for r in recs if r["position"] is not None] == want
-    n_pages = -(-orders.count() // 700)
-    assert [r["position"] for r in recs].count(None) == n_pages
+    assert [r["position"] for r in recs] == want
+    # pages read the keys high to low, 700 at a time: each ends at its lowest
+    keys = sorted((r[0] for r in orders.select("o_orderkey").collect()), reverse=True)
+    pages = [[keys[min(i + 700, len(keys)) - 1]] for i in range(0, len(keys), 700)]
+    assert [r["snapshot_key"] for r in recs] == pages + [None] * (len(recs) - len(pages))
     for rec in recs:
         data = spark.read.parquet(str(tmp_path / "out" / "data" / f"batch={rec['batch_id']}"))
         assert rec["position"] == data.agg(F.max("change_seq")).collect()[0][0]
+
+
+def test_pipeline_run_trigger_is_one_job(spark, sf_dir, tmp_path):
+    """A trigger over scan-only inputs is one Spark job: the snapshot page
+    and the change batch share the commit's write, which also observes the
+    page's row count and low key (no cache, collect or probe job)."""
+    orders = load_table(spark, sf_dir, "orders")
+    feed = spark.read.parquet(_feed_file(spark, sf_dir, tmp_path))
+    n_orders, n_feed = orders.count(), feed.count()
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    # a batch larger than both inputs: one trigger drains them
+    batch = max(n_orders, n_feed) + 1
+    run = PipelineRun(spark, orders, feed, ["o_orderkey"], sink, batch_size=batch)
+    assert _jobs_in_group(spark, run.run) == 1
+    (rec,) = _manifest(sink)
+    assert rec["snapshot_key"] == [orders.agg(F.min("o_orderkey")).collect()[0][0]]
+    assert rec["position"] == feed.agg(F.max("change_seq")).collect()[0][0]
+    n_deletes = feed.filter(F.col("__operation") == 1).count()
+    assert run.rows_committed == n_orders + n_feed + n_deletes
+
+
+def test_sink_reads_launch_no_schema_job(spark, sf_dir, tmp_path):
+    """load_table and read_committed take their schema from the parquet
+    footer (equal to the one Spark infers: tests/test_footer_schema.py), so
+    they launch no schema-inference job."""
+    orders = load_table(spark, sf_dir, "orders")
+    feed = cdc_events(spark, sf_dir)
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    PipelineRun(spark, orders, feed, ["o_orderkey"], sink, batch_size=700).run()
+    assert _jobs_in_group(spark, lambda: load_table(spark, sf_dir, "orders")) == 0
+    assert _jobs_in_group(spark, lambda: sink.read_committed(spark)) == 0
 
 
 def test_snapshot_key_without_a_text_round_trip_raises(spark, sf_dir, tmp_path):

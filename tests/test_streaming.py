@@ -67,10 +67,11 @@ def test_snapshot_stream_reverse_pagination_no_dupes_no_gaps(spark, sf_dir):
         if page is None:
             break
         page_keys = [r["o_orderkey"] for r in page.select("o_orderkey").collect()]
+        # the collect ran the page: its observed low key is the resume key
+        assert ss.page_key() == ((min(page_keys),) if page_keys else None)
         # reverse order within each page (T7 invariant)
         assert page_keys == sorted(page_keys, reverse=True)
         keys.extend(page_keys)
-        page.unpersist()
     assert len(keys) == orders.count()
     assert len(set(keys)) == len(keys)  # no double-reads
     assert keys == sorted(keys, reverse=True)  # globally descending
@@ -89,8 +90,8 @@ def test_unified_feed_carries_both_snapshot_and_changes(spark, sf_dir):
 
 
 def test_snapshot_unified_drain_witness_releases_its_pages(spark, sf_dir):
-    """The T7 witness drains every keyset page, each cached by next_page,
-    and leaves none of them cached; its union still holds every row."""
+    """The T7 witness drains every keyset page and leaves none of them
+    cached (the pager caches nothing); its union still holds every row."""
     from sqlserver_cdc_to_kafka_spark.queries.cdc import q_stream_snapshot_unified_drain
 
     persisted = spark.sparkContext._jsc.getPersistentRDDs

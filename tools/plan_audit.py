@@ -280,14 +280,6 @@ MIXED_PERSIST_RELEASE_BY_CONTRACT: dict[str, str] = {
         "(r15: the projection previously re-executed the caller's whole "
         "upstream DAG once per pass and once per group×label target)"
     ),
-    "streaming/snapshot_stream.py:next_page": (
-        "the empty-page branch releases the SAME cached `page` frame; a "
-        "non-empty page is RETURNED cached and released by the caller, "
-        "a net-negative function: streaming/pipeline_run.py:82 in a "
-        "`finally` after the commit drains it (or raises), and "
-        "queries/cdc.py:q_stream_snapshot_unified_drain once its union "
-        "plan is built"
-    ),
 }
 
 
