@@ -160,13 +160,13 @@ def _run_pipeline(spark, sf_dir: str, sink_dir: str, cfg: EngineConfig) -> None:
     snapshot = [orders] if cfg.table_snapshotted(fq_name) else []
     feed = cdc_events(spark, sf_dir)
     if cfg.disable_deletion_tombstones:
-        feed = feed.filter(F.col("__operation") != 1)
+        feed = feed.filter("__operation != 1")
     path = f"{sink_dir}/{topic}"
     obs = Observation()
     unified_feed(snapshot, feed).observe(
         obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.count_if(F.col("__operation") == 0).alias("snapshot_rows"),
+        F.expr("count(1) AS rows"),
+        F.expr("count_if(__operation = 0) AS snapshot_rows"),
     ).write.mode("overwrite").parquet(path)
     _emit("topic_written", topic=topic, path=path, **obs.get)
 

@@ -24,14 +24,13 @@ decoded subset, avro.py:536-543); insert/delete carry all columns
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.model.envelope import (
     OP_DELETE,
     OP_INSERT,
     OP_POST_UPDATE,
 )
-from sqlserver_cdc_to_kafka_spark.tables import ensure_parallel, load_table
+from sqlserver_cdc_to_kafka_spark.tables import ensure_parallel, load_table, sql_string
 
 ORDERS_PAYLOAD = [
     "o_orderkey",
@@ -51,9 +50,9 @@ LINEITEM_PAYLOAD = [
 ]
 
 
-def _conditional(struct_col, cond):
+def _conditional(struct_sql: str, cond_sql: str) -> str:
     """[struct] when cond else [] — typed empty via zero-length slice."""
-    return F.slice(F.array(struct_col), 1, F.when(cond, 1).otherwise(0))
+    return f"slice(array({struct_sql}), 1, CASE WHEN {cond_sql} THEN 1 ELSE 0 END)"
 
 
 def cdc_events(
@@ -63,7 +62,9 @@ def cdc_events(
 
     Generated in ONE scan: each order row expands (explode) to its 1-3
     change events — no 3-way self-union, so the source is read and
-    repartitioned once however many branches the derivation has.
+    repartitioned once however many branches the derivation has. The
+    events are one SQL expression, so building the plan costs a few driver
+    round trips, not several per field.
 
     ``key_partitioned`` (r16, guide §2.4 "share one exchange"): hash-
     repartition ORDERS by ``o_orderkey`` BEFORE the explode and keep
@@ -80,61 +81,44 @@ def cdc_events(
     default."""
     orders = load_table(spark, sf_dir, "orders")
     orders = (
-        orders.repartition(F.col("o_orderkey"))
-        if key_partitioned
-        else ensure_parallel(orders)
+        orders.repartition("o_orderkey") if key_partitioned else ensure_parallel(orders)
     )
-    k = F.col("o_orderkey")
-    et = F.col("o_orderdate")
-    all_fields = F.array(*[F.lit(c) for c in ORDERS_PAYLOAD])
+    all_fields = f"array({', '.join(sql_string(c) for c in ORDERS_PAYLOAD)})"
+    names = ["__operation", "change_seq", "__event_time", "__updated_fields", *ORDERS_PAYLOAD]
 
-    def ev(op, seq, time, updated, custkey, status, total, odate, prio):
-        fields = [
-            F.lit(op).alias("__operation"),
-            seq.cast("bigint").alias("change_seq"),
-            time.alias("__event_time"),
-            updated.alias("__updated_fields"),
-        ]
-        if not key_partitioned:
-            # default layout: key inside the struct (select("e.*") below)
-            fields.append(k.alias("o_orderkey"))
-        fields.extend(
-            [
-                custkey.alias("o_custkey"),
-                status.alias("o_orderstatus"),
-                total.alias("o_totalprice"),
-                odate.alias("o_orderdate"),
-                prio.alias("o_orderpriority"),
-            ]
-        )
-        return F.struct(*fields)
+    def ev(op, seq, time, updated, *payload):
+        values = [op, f"CAST({seq} AS BIGINT)", time, updated, "o_orderkey", *payload]
+        return "named_struct(" + ", ".join(
+            f"{sql_string(n)}, {v}"
+            for n, v in zip(names, values)
+            # default layout: key inside the struct (e.* below)
+            if n != "o_orderkey" or not key_partitioned
+        ) + ")"
 
     ins = ev(
-        OP_INSERT, k * 3, et, all_fields,
-        F.col("o_custkey"), F.col("o_orderstatus"), F.col("o_totalprice"),
-        F.col("o_orderdate"), F.col("o_orderpriority"),
+        OP_INSERT, "o_orderkey * 3", "o_orderdate", all_fields,
+        "o_custkey", "o_orderstatus", "o_totalprice", "o_orderdate", "o_orderpriority",
     )
     upd = ev(
-        OP_POST_UPDATE, k * 3 + 1, et + F.expr("INTERVAL 1 HOUR"),
-        F.array(F.lit("o_orderstatus")),
-        F.col("o_custkey"), F.lit("U"), F.col("o_totalprice"),
-        F.col("o_orderdate"), F.col("o_orderpriority"),
+        OP_POST_UPDATE, "o_orderkey * 3 + 1", "o_orderdate + INTERVAL 1 HOUR",
+        "array('o_orderstatus')",
+        "o_custkey", "'U'", "o_totalprice", "o_orderdate", "o_orderpriority",
     )
-    dtype_date = orders.schema["o_orderdate"].dataType
+    date_type = orders.schema["o_orderdate"].dataType.simpleString()
     del_ = ev(
-        OP_DELETE, k * 3 + 2, et + F.expr("INTERVAL 2 HOUR"), all_fields,
-        F.lit(None).cast("bigint"), F.lit(None).cast("string"),
-        F.lit(None).cast("double"), F.lit(None).cast(dtype_date),
-        F.lit(None).cast("string"),
+        OP_DELETE, "o_orderkey * 3 + 2", "o_orderdate + INTERVAL 2 HOUR", all_fields,
+        "CAST(NULL AS BIGINT)", "CAST(NULL AS STRING)", "CAST(NULL AS DOUBLE)",
+        f"CAST(NULL AS {date_type})", "CAST(NULL AS STRING)",
     )
-    events = F.concat(
-        F.array(ins), _conditional(upd, k % 5 == 0), _conditional(del_, k % 17 == 0)
+    events = (
+        f"explode(concat(array({ins}), {_conditional(upd, 'o_orderkey % 5 = 0')}, "
+        f"{_conditional(del_, 'o_orderkey % 17 = 0')})) AS e"
     )
     if key_partitioned:
         # o_orderkey passes through the Generate as the ORIGINAL attribute,
         # which is what lets Catalyst carry hashpartitioning(o_orderkey)
         # across the explode; column order matches the default path exactly
-        return orders.select("o_orderkey", F.explode(events).alias("e")).select(
+        return orders.selectExpr("o_orderkey", events).selectExpr(
             "e.__operation",
             "e.change_seq",
             "e.__event_time",
@@ -146,7 +130,7 @@ def cdc_events(
             "e.o_orderdate",
             "e.o_orderpriority",
         )
-    return orders.select(F.explode(events).alias("e")).select("e.*")
+    return orders.selectExpr(events).selectExpr("e.*")
 
 
 def cdc_lineitem_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -158,33 +142,26 @@ def cdc_lineitem_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode generation as the orders feed.
     """
     li = ensure_parallel(load_table(spark, sf_dir, "lineitem"))
-    kk = F.col("l_orderkey") * 8 + F.col("l_linenumber")
-    et = F.col("l_shipdate")
+    kk = "(l_orderkey * 8 + l_linenumber)"
 
     def ev(op, seq, time, qty, price, flag):
-        return F.struct(
-            F.lit(op).alias("__operation"),
-            seq.cast("bigint").alias("change_seq"),
-            time.alias("__event_time"),
-            F.col("l_orderkey").alias("l_orderkey"),
-            F.col("l_linenumber").alias("l_linenumber"),
-            qty.alias("l_quantity"),
-            price.alias("l_extendedprice"),
-            flag.alias("l_returnflag"),
+        return (
+            f"named_struct('__operation', {op}, 'change_seq', CAST({seq} AS BIGINT), "
+            f"'__event_time', {time}, 'l_orderkey', l_orderkey, "
+            f"'l_linenumber', l_linenumber, 'l_quantity', {qty}, "
+            f"'l_extendedprice', {price}, 'l_returnflag', {flag})"
         )
 
-    ins = ev(OP_INSERT, kk * 3, et, F.col("l_quantity"),
-             F.col("l_extendedprice"), F.col("l_returnflag"))
-    upd = ev(OP_POST_UPDATE, kk * 3 + 1, et + F.expr("INTERVAL 1 HOUR"),
-             F.col("l_quantity") + 1.0, F.col("l_extendedprice"),
-             F.col("l_returnflag"))
-    del_ = ev(OP_DELETE, kk * 3 + 2, et + F.expr("INTERVAL 2 HOUR"),
-              F.lit(None).cast("double"), F.lit(None).cast("double"),
-              F.lit(None).cast("string"))
-    events = F.concat(
-        F.array(ins), _conditional(upd, kk % 5 == 0), _conditional(del_, kk % 17 == 0)
-    )
-    return li.select(F.explode(events).alias("e")).select("e.*")
+    ins = ev(OP_INSERT, f"{kk} * 3", "l_shipdate", "l_quantity", "l_extendedprice",
+             "l_returnflag")
+    upd = ev(OP_POST_UPDATE, f"{kk} * 3 + 1", "l_shipdate + INTERVAL 1 HOUR",
+             "l_quantity + 1.0D", "l_extendedprice", "l_returnflag")
+    del_ = ev(OP_DELETE, f"{kk} * 3 + 2", "l_shipdate + INTERVAL 2 HOUR",
+              "CAST(NULL AS DOUBLE)", "CAST(NULL AS DOUBLE)", "CAST(NULL AS STRING)")
+    return li.selectExpr(
+        f"explode(concat(array({ins}), {_conditional(upd, f'{kk} % 5 = 0')}, "
+        f"{_conditional(del_, f'{kk} % 17 = 0')})) AS e"
+    ).selectExpr("e.*")
 
 
 def with_cdc_views(spark: SparkSession, sf_dir: str) -> None:

@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.model.envelope import OP_DELETE
+from sqlserver_cdc_to_kafka_spark.tables import quote
 
 
 def last_value_per_key(
@@ -31,13 +32,13 @@ def last_value_per_key(
 ) -> DataFrame:
     """Latest row per key by ``order_col``; with ``drop_deleted`` keys whose
     final operation is Delete are compacted away (tombstone semantics)."""
-    payload = [c for c in df.columns if c not in key_cols]
+    payload = [quote(c) for c in df.columns if c not in key_cols]
     agg = df.groupBy(*key_cols).agg(
-        F.max_by(F.struct(*payload), F.col(order_col)).alias("__last")
+        F.expr(f"max_by(struct({', '.join(payload)}), {quote(order_col)}) AS __last")
     )
-    out = agg.select(*key_cols, *[F.col(f"__last.{c}").alias(c) for c in payload])
+    out = agg.selectExpr(*map(quote, key_cols), *[f"__last.{c} AS {c}" for c in payload])
     if drop_deleted:
-        out = out.filter(F.col(op_col) != OP_DELETE)
+        out = out.filter(f"{quote(op_col)} != {OP_DELETE}")
     return out
 
 

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.model.envelope import OP_SNAPSHOT
+from sqlserver_cdc_to_kafka_spark.tables import quote, sql_string
 
 
 def key_tuple_below(df: DataFrame, key_cols: Sequence[str], last_key: Sequence) -> Column:
@@ -55,29 +56,31 @@ def snapshot_page(
     return page.orderBy(*[F.col(c).desc() for c in key_cols]).limit(batch_size)
 
 
-def snapshot_envelope(
-    df: DataFrame,
-    dropped_cols: Mapping[str, str] | None = None,
-    event_time: Column | None = None,
-) -> DataFrame:
-    """S2 envelope synthesis (``sql_queries.py:298-303``): op=Snapshot, NULL
+def envelope_sql(
+    columns: Sequence[str], dropped_cols: Mapping[str, str] | None = None
+) -> dict[str, str]:
+    """S2 envelope synthesis (``sql_queries.py:298-303``) as SQL text, one
+    expression per output column in order: op=Snapshot, NULL
     LSN/seqval/command_id, snapshot read time; P2: dropped-but-captured
     columns re-added as typed NULLs."""
-    all_fields = list(df.columns) + sorted(dropped_cols or {})
-    out = df.select(
-        F.lit(OP_SNAPSHOT).alias("__operation"),
-        (event_time if event_time is not None else F.current_timestamp()).alias(
-            "__event_time"
-        ),
-        F.lit(None).cast("binary").alias("__log_lsn"),
-        F.lit(None).cast("int").alias("__command_id"),
-        F.lit(None).cast("binary").alias("__log_seqval"),
-        F.array([F.lit(c) for c in all_fields]).alias("__updated_fields"),
-        *[F.col(c) for c in df.columns],
-    )
-    for name, sql_type in sorted((dropped_cols or {}).items()):
-        out = out.withColumn(name, F.lit(None).cast(sql_type))
-    return out
+    all_fields = list(columns) + sorted(dropped_cols or {})
+    return {
+        "__operation": str(OP_SNAPSHOT),
+        "__event_time": "current_timestamp()",
+        "__log_lsn": "CAST(NULL AS BINARY)",
+        "__command_id": "CAST(NULL AS INT)",
+        "__log_seqval": "CAST(NULL AS BINARY)",
+        "__updated_fields": f"array({', '.join(sql_string(c) for c in all_fields)})",
+        **{c: quote(c) for c in columns},
+        **{c: f"CAST(NULL AS {t})" for c, t in sorted((dropped_cols or {}).items())},
+    }
+
+
+def snapshot_envelope(df: DataFrame, dropped_cols: Mapping[str, str] | None = None) -> DataFrame:
+    """The snapshot envelope (``envelope_sql``) of ``df``'s rows, in one
+    projection."""
+    exprs = envelope_sql(df.columns, dropped_cols)
+    return df.selectExpr(*[f"{e} AS {quote(c)}" for c, e in exprs.items()])
 
 
 def change_window_scan(

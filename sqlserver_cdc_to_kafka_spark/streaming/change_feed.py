@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.model.envelope import OP_DELETE
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
+from sqlserver_cdc_to_kafka_spark.tables import quote
 
 DEFAULT_BATCH_SIZE = 2000  # options.py:282-285
 
@@ -49,7 +50,7 @@ def poll_window(
     committed position (all rows when ``after`` is None), capped at
     max_rows in index order — ``maxOffsetsPerTrigger`` semantics (T3)."""
     if after is not None:
-        feed = feed.filter(F.col(idx_col) > F.lit(after))
+        feed = feed.filter(f"{quote(idx_col)} > {int(after)}")
     return feed.orderBy(idx_col).limit(max_rows)
 
 
@@ -61,14 +62,15 @@ def with_tombstones(
     emission order) so compaction applies them last. One pass over
     ``batch``: each delete row is exploded into itself and its tombstone,
     so an uncached batch is evaluated once."""
-    payload = [c for c in batch.columns if c not in key_cols and c != op_col]
-    tomb = F.when(F.col(op_col) == OP_DELETE, F.array(F.lit(False), F.lit(True)))
-    out = batch.withColumn(
-        "__tombstone", F.explode(F.coalesce(tomb, F.array(F.lit(False))))
+    out = batch.selectExpr(
+        "*",
+        f"explode(CASE WHEN {quote(op_col)} = {OP_DELETE} THEN array(false, true) "
+        "ELSE array(false) END) AS __tombstone",
     )
-    return out.select(
+    return out.selectExpr(
         *[
-            F.when(~F.col("__tombstone"), F.col(c)).alias(c) if c in payload else c
+            quote(c) if c in key_cols or c == op_col
+            else f"CASE WHEN NOT __tombstone THEN {quote(c)} END AS {quote(c)}"
             for c in batch.columns
         ],
         "__tombstone",
@@ -104,7 +106,7 @@ class MicroBatcher:
         obs = Observation()
         batch = poll_window(
             self.feed, self.sink.last_progress(), self.idx_col, self.batch_size
-        ).observe(obs, F.count(F.lit(1)).alias("rows"))
+        ).observe(obs, F.expr("count(1) AS rows"))
         if snapshot is not None:
             batch = batch.unionByName(snapshot)
         commit = self.commit or self.sink.commit_batch

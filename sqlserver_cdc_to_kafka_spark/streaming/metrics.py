@@ -22,6 +22,8 @@ from typing import TextIO
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from sqlserver_cdc_to_kafka_spark.tables import quote
+
 METRICS_REPORTING_INTERVAL_S = 20  # constants.py:8
 
 
@@ -86,18 +88,17 @@ def observed_batch(batch: DataFrame, op_col: str = "__operation", idx_col: str =
     second scan. ``rows`` counts tombstones (T6); ``deletes`` does not —
     a tombstone keeps its delete's operation. Returns (observed_df,
     observation)."""
-    is_delete = F.col(op_col) == 1
-    if "__tombstone" in batch.columns:
-        is_delete &= ~F.col("__tombstone")
+    op = quote(op_col)
+    not_tomb = " AND NOT __tombstone" if "__tombstone" in batch.columns else ""
     obs = Observation()
     observed = batch.observe(
         obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.count_if(is_delete).alias("deletes"),
-        F.count_if(F.col(op_col) == 2).alias("inserts"),
-        F.count_if(F.col(op_col) == 4).alias("updates"),
-        F.count_if(F.col(op_col) == 0).alias("snapshots"),
-        F.max(idx_col).alias("max_index"),
+        F.expr("count(1) AS rows"),
+        F.expr(f"count_if({op} = 1{not_tomb}) AS deletes"),
+        F.expr(f"count_if({op} = 2) AS inserts"),
+        F.expr(f"count_if({op} = 4) AS updates"),
+        F.expr(f"count_if({op} = 0) AS snapshots"),
+        F.expr(f"max({quote(idx_col)}) AS max_index"),
     )
     return observed, obs
 

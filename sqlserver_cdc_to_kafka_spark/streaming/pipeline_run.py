@@ -24,7 +24,6 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.streaming.change_feed import (
     MicroBatcher,
@@ -81,18 +80,13 @@ class PipelineRun:
         )
         while True:
             page = snap.next_page()
-            emitted = mb.run_once(None if page is None else self._snapshot_rows(page))
+            # on the feed's types, as all the sink's batches (the read time too)
+            rows = None if page is None else snapshot_rows(page, self.change_feed, cast=True)
+            emitted = mb.run_once(rows)
             if snap.completed and emitted < self.batch_size:
                 return self.rows_committed
 
     # -- internals ---------------------------------------------------------
-
-    def _snapshot_rows(self, page: DataFrame) -> DataFrame:
-        # on the feed's types, as all the sink's batches (the read time too)
-        rows = snapshot_rows(page, self.change_feed)
-        return rows.select(
-            *[F.col(c).cast(self.change_feed.schema[c].dataType) for c in rows.columns]
-        )
 
     def _commit(self, batch: DataFrame, snapshot_key=None) -> int:
         observed, obs = observed_batch(batch)

@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sqlserver_cdc_to_kafka_spark.tables import first_data_file
+from sqlserver_cdc_to_kafka_spark.tables import first_data_file, quote
 
 
 def _key_text(value) -> str:
@@ -194,8 +194,7 @@ class TransactionalDirSink:
         position = self._progress(records, "change_rows", "position")
         batch_id = self._next_id(records)
         if position is not None:
-            seq = F.col("change_seq")
-            batch = batch.filter(seq.isNull() | (seq > F.lit(position)))
+            batch = batch.filter(f"change_seq IS NULL OR change_seq > {int(position)}")
         stage = os.path.join(self.root, "_staging", f"batch={batch_id}")
         final = os.path.join(self.root, "data", f"batch={batch_id}")
         if os.path.exists(stage):
@@ -203,9 +202,9 @@ class TransactionalDirSink:
         obs = Observation()
         batch.observe(
             obs,
-            F.count(F.lit(1)).alias("rows"),
-            F.min("change_seq").alias("first"),
-            F.max("change_seq").alias("pos"),
+            F.expr("count(1) AS rows"),
+            F.expr("min(change_seq) AS first"),
+            F.expr("max(change_seq) AS pos"),
         ).write.mode("overwrite").parquet(stage)
         observed = obs.get
         if callable(snapshot_key):
@@ -312,16 +311,15 @@ class TransactionalDirSink:
         # NULL order values are either snapshot rows (base state — oldest for
         # their key: every change logically follows the backfill, T7) or
         # tombstones (emitted right after their delete — newest for the key)
-        ordk = F.struct(
-            F.when(F.col(tombstone_col), F.lit(2**62))
-            .otherwise(F.coalesce(F.col(order_col), F.lit(-1)))
-            .alias("o"),
-            F.col(tombstone_col).cast("int").alias("t"),
+        tomb = quote(tombstone_col)
+        ordk = (
+            f"named_struct('o', CASE WHEN {tomb} THEN {2**62} "
+            f"ELSE coalesce({quote(order_col)}, -1) END, 't', CAST({tomb} AS INT)) AS __ordk"
         )
         last = last_value_per_key(
-            df.withColumn("__ordk", ordk), key_cols, "__ordk", drop_deleted=False
+            df.selectExpr("*", ordk), key_cols, "__ordk", drop_deleted=False
         )
-        live = last.filter(~F.col(tombstone_col)).drop("__ordk")
+        live = last.filter(f"NOT {tomb}").drop("__ordk")
 
         max_id = self._next_id(records) - 1
         # capture progress BEFORE rewriting the manifest
@@ -338,7 +336,7 @@ class TransactionalDirSink:
         if os.path.exists(stage):
             shutil.rmtree(stage)
         obs = Observation()  # the write's own job counts the survivors
-        live.observe(obs, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(stage)
+        live.observe(obs, F.expr("count(1) AS n")).write.mode("overwrite").parquet(stage)
         n = obs.get["n"]
         if os.path.exists(final):
             shutil.rmtree(final)

@@ -22,7 +22,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from sqlserver_cdc_to_kafka_spark.sources.snapshot import snapshot_envelope, snapshot_page
+from sqlserver_cdc_to_kafka_spark.sources.snapshot import envelope_sql, snapshot_page
+from sqlserver_cdc_to_kafka_spark.tables import quote
 
 
 @dataclass
@@ -54,10 +55,9 @@ class SnapshotStream:
         if self.completed:
             return None
         self._seen = Observation()
+        keys = ", ".join(quote(c) for c in self.key_cols)
         return snapshot_page(self.source, self.key_cols, self.last_key, self.batch_size).observe(
-            self._seen,
-            F.count(F.lit(1)).alias("n"),
-            F.min(F.struct(*self.key_cols)).alias("low_key"),
+            self._seen, F.expr("count(1) AS n"), F.expr(f"min(struct({keys})) AS low_key")
         )
 
     def page_key(self) -> tuple | None:
@@ -75,17 +75,19 @@ class SnapshotStream:
         return self.last_key
 
 
-def snapshot_rows(page: DataFrame, feed: DataFrame) -> DataFrame:
+def snapshot_rows(page: DataFrame, feed: DataFrame, cast: bool = False) -> DataFrame:
     """T7: snapshot rows (op=0, NULL LSN, read time, all columns updated) on
-    ``feed``'s columns, a column the envelope lacks as a NULL of the feed's
-    type (a page may be the whole table)."""
-    env = snapshot_envelope(page)
-    return env.select(
-        *[
-            c if c in env.columns else F.lit(None).cast(feed.schema[c].dataType).alias(c)
-            for c in feed.columns
-        ]
-    )
+    ``feed``'s columns, in one projection: a column the envelope lacks is a
+    NULL of the feed's type (a page may be the whole table), and with
+    ``cast`` every column takes the feed's type (the read time too)."""
+    env = envelope_sql(page.columns)
+    exprs = []
+    for f in feed.schema:
+        e = env.get(f.name, "NULL")
+        if cast or f.name not in env:
+            e = f"CAST({e} AS {f.dataType.simpleString()})"
+        exprs.append(f"{e} AS {quote(f.name)}")
+    return page.selectExpr(*exprs)
 
 
 def unified_feed(snapshot_pages: list[DataFrame], change_batch: DataFrame) -> DataFrame:

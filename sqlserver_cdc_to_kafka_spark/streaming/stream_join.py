@@ -27,6 +27,7 @@ from sqlserver_cdc_to_kafka_spark.streaming.windows import (
     scoped_shuffle_partitions,
     state_partitions,
 )
+from sqlserver_cdc_to_kafka_spark.tables import load_table
 
 
 def _sides(ev, left_type: str, right_type: str):
@@ -166,7 +167,7 @@ def attribution_join_outer_drain(
     shutil.copyfile(f"{sf_dir}/events.parquet", real)
     schema = events_schema(spark, sf_dir)
 
-    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    batch = load_table(spark, sf_dir, "events")
     max_us = batch.select(F.max(epoch_micros(batch, "ts")).alias("m")).collect()[0]["m"]
     sentinel_us = max_us + 4 * horizon_micros
     ts_dt = batch.schema["ts"].dataType

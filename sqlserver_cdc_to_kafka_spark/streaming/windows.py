@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sqlserver_cdc_to_kafka_spark.functions.datetime_fns import as_event_time
+from sqlserver_cdc_to_kafka_spark.tables import load_table
 
 
 def state_partitions(
@@ -90,12 +91,11 @@ def drained(df: DataFrame, scratch: str) -> DataFrame:
 
 def events_schema(spark: SparkSession, sf_dir: str) -> T.StructType:
     """The ACTUAL schema of the events fixture, read from the parquet footer
-    via a batch scan (schema-only; no data read). Hard-coding the schema here
-    silently corrupted every event when the testdata's `ts` migrated from
-    nanos-LONG to TIMESTAMP micros — a wrong explicit readStream schema
-    reinterprets the raw int64 without error."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    return spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    (``load_table``: no data read and no schema-inference job). Hard-coding
+    the schema here silently corrupted every event when the testdata's `ts`
+    migrated from nanos-LONG to TIMESTAMP micros — a wrong explicit
+    readStream schema reinterprets the raw int64 without error."""
+    return load_table(spark, sf_dir, "events").schema
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -203,7 +203,7 @@ def windowed_counts_file_sink(
     src = f"{sf_dir}/events.parquet"
     shutil.copyfile(src, os.path.join(stage, "a_events.parquet"))
 
-    batch = spark.read.parquet(src)
+    batch = load_table(spark, sf_dir, "events")
     max_us = batch.select(F.max(epoch_micros(batch, "ts")).alias("m")).collect()[0]["m"]
     # r16: state partitions sized to the feed (see state_partitions) — both
     # passes run under the same scoped value (checkpoint-pinned)

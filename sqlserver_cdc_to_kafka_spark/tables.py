@@ -61,9 +61,20 @@ def arrow_type_ddl(t) -> str:
     raise ValueError(f"unmapped arrow type {t}")
 
 
+def quote(name: str) -> str:
+    """``name`` as a Spark SQL identifier: backticked, with each backtick in
+    it doubled (a SQL Server bracketed name may hold one)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_string(text: str) -> str:
+    """``text`` as a Spark SQL string literal (a column name listed as data)."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
 def arrow_schema_ddl(schema) -> str:
     """A DDL schema string for a parquet footer's Arrow ``schema``."""
-    return ", ".join(f"`{f.name}` {arrow_type_ddl(f.type)}" for f in schema)
+    return ", ".join(f"{quote(f.name)} {arrow_type_ddl(f.type)}" for f in schema)
 
 
 def first_data_file(path: str) -> str:

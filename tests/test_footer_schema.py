@@ -1,7 +1,8 @@
 """Footer schemas: ``load_table`` maps the parquet footer's Arrow schema and
 ``read_committed`` takes the Spark schema Spark stores in its own files, so
 neither launches a schema-inference job. Both must equal the schema Spark
-infers, nullability included, or a read would reinterpret a column."""
+infers, nullability included, or a read would reinterpret a column; a
+column name with a space or a backtick in it must map too."""
 
 from __future__ import annotations
 
@@ -12,6 +13,8 @@ import sys
 import pytest
 
 from sqlserver_cdc_to_kafka_spark.fixtures.cdc_events import cdc_events
+from sqlserver_cdc_to_kafka_spark.operators.compaction import last_value_per_key
+from sqlserver_cdc_to_kafka_spark.sources.snapshot import snapshot_envelope
 from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import PipelineRun
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 from sqlserver_cdc_to_kafka_spark.tables import DEFAULT_SF_DIR, TABLES, load_table
@@ -49,6 +52,39 @@ def test_load_table_schema_equals_inferred_on_directory_tables(spark, tmp_path):
     for name in TABLES:
         got = load_table(spark, str(out), name).schema
         assert got == _inferred(spark, str(out / f"{name}.parquet")), name
+
+
+ODD_NAMES = ["id", "note `x`", "a b", "it's \\ here"]
+
+
+def _odd_table(tmp_path) -> str:
+    """A table whose column names need quoting, as SQL Server's bracketed
+    identifiers allow."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    values = [[1, 2, 2], ["a", "b", "c"], [10, 20, 30], [1.5, 2.5, None]]
+    table = pa.table(dict(zip(ODD_NAMES, values)))
+    pq.write_table(table, str(tmp_path / "odd.parquet"))
+    return str(tmp_path)
+
+
+def test_load_table_schema_equals_inferred_with_odd_column_names(spark, tmp_path):
+    sf = _odd_table(tmp_path)
+    assert load_table(spark, sf, "odd").schema == _inferred(spark, f"{sf}/odd.parquet")
+
+
+def test_text_plan_builders_quote_odd_column_names(spark, tmp_path):
+    """The builders that write plans as SQL text quote each name they take
+    from a schema, as identifiers and as data."""
+    odd = load_table(spark, _odd_table(tmp_path), "odd")
+    env = snapshot_envelope(odd.filter("id = 1"))
+    assert env.columns[-4:] == ODD_NAMES
+    (row,) = env.collect()
+    assert row["__updated_fields"] == ODD_NAMES
+    assert tuple(row)[-4:] == (1, "a", 10, 1.5)
+    last = last_value_per_key(odd, ["id"], "a b", drop_deleted=False)
+    assert sorted(map(tuple, last.collect())) == [(1, "a", 10, 1.5), (2, "c", 30, None)]
 
 
 def test_read_committed_schema_equals_inferred(spark, sf_dir, tmp_path):

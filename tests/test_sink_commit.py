@@ -22,6 +22,7 @@ from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import (
     foreach_batch_writer,
 )
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
+from sqlserver_cdc_to_kafka_spark.streaming.windows import events_schema
 from sqlserver_cdc_to_kafka_spark.tables import load_table
 
 
@@ -248,16 +249,45 @@ def test_pipeline_run_trigger_is_one_job(spark, sf_dir, tmp_path):
     assert run.rows_committed == n_orders + n_feed + n_deletes
 
 
+def test_pipeline_run_trigger_round_trips(spark, sf_dir, tmp_path, monkeypatch):
+    """A trigger builds its plan from SQL text, with no call-site capture
+    (``session.get_spark``), so it costs a bounded number of py4j round
+    trips rather than several per column and function (1,683 per commit
+    when each builder made one Column at a time). ``m`` commands are py4j
+    releasing proxies on Python GC, so their count varies from run to run."""
+    from py4j.clientserver import ClientServerConnection
+
+    orders = load_table(spark, sf_dir, "orders")
+    feed = cdc_events(spark, sf_dir)
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    run = PipelineRun(spark, orders, feed, ["o_orderkey"], sink, batch_size=700)
+    sent = []
+    send = ClientServerConnection.send_command
+
+    def counting_send(self, command):
+        sent.append(command[:1])
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counting_send)
+    run.run()
+    monkeypatch.undo()
+    commits = len(sink.committed_batches())
+    assert commits == 3
+    assert sum(c != "m" for c in sent) <= 250 * commits
+
+
 def test_sink_reads_launch_no_schema_job(spark, sf_dir, tmp_path):
     """load_table and read_committed take their schema from the parquet
     footer (equal to the one Spark infers: tests/test_footer_schema.py), so
-    they launch no schema-inference job."""
+    they launch no schema-inference job; nor does the streaming jobs'
+    events schema, which load_table gives."""
     orders = load_table(spark, sf_dir, "orders")
     feed = cdc_events(spark, sf_dir)
     sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
     PipelineRun(spark, orders, feed, ["o_orderkey"], sink, batch_size=700).run()
     assert _jobs_in_group(spark, lambda: load_table(spark, sf_dir, "orders")) == 0
     assert _jobs_in_group(spark, lambda: sink.read_committed(spark)) == 0
+    assert _jobs_in_group(spark, lambda: events_schema(spark, sf_dir)) == 0
 
 
 def test_snapshot_key_without_a_text_round_trip_raises(spark, sf_dir, tmp_path):
