@@ -621,7 +621,6 @@ def q_stream_drain_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.readStream.format("cdc_change_feed")
         .option("path", path)
         .option("batchSize", max(1, n_rows // 8))
-        .option("seqColumn", "change_seq")
         .load()
     )
     qname = f"drain_{uuid.uuid4().hex[:8]}"  # fresh sink table per call

@@ -2,7 +2,7 @@
 (SURVEY §4 'custom Spark work actually required' item 1).
 
 ``cdc_change_feed`` is a Python DataSource (Spark 4 `pyspark.sql.datasource`)
-that tails a change log (here: a parquet file with a monotone sequence
+that tails a change log (here: a parquet file with a monotone ``change_seq``
 column — the fixture stand-in for a CDC change table; a JDBC deployment
 swaps the pyarrow scan for the `sources/jdbc_sql.change_window_sql` query)
 and exposes the change position as its STREAMING OFFSET:
@@ -27,8 +27,7 @@ and exposes the change position as its STREAMING OFFSET:
 Usage:
     spark.dataSource.register(ChangeFeedDataSource)
     spark.readStream.format("cdc_change_feed")
-         .option("path", feed_path).option("batchSize", 2000)
-         .option("seqColumn", "change_seq").load()
+         .option("path", feed_path).option("batchSize", 2000).load()
 """
 
 from __future__ import annotations
@@ -52,7 +51,6 @@ def _int64(value: int):
 class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
     def __init__(self, schema, options: dict) -> None:
         self.path = options["path"]
-        self.seq_col = options.get("seqColumn", "change_seq")
         self.batch_size = int(options.get("batchSize", 2000))
         self.schema = schema
 
@@ -63,7 +61,7 @@ class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
         """Each row group with the (min, max) of its sequence column from
         the footer statistics, or (None, None) when it has none (r15: the
         driver reads footers per trigger, not the sequence column)."""
-        idx = pf.schema_arrow.get_field_index(self.seq_col)
+        idx = pf.schema_arrow.get_field_index("change_seq")
         groups = []
         for rg in range(pf.metadata.num_row_groups):
             st = pf.metadata.row_group(rg).column(idx).statistics
@@ -81,7 +79,7 @@ class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
             [rg for rg, mn, mx in groups if mx is None or (mx > lo and (hi is None or mn <= hi))],
             columns=columns,
         )
-        seq = table.column(self.seq_col)
+        seq = table.column("change_seq")
         keep = pc.greater(seq, _int64(lo))
         if hi is not None:
             keep = pc.and_(keep, pc.less_equal(seq, _int64(hi)))
@@ -110,13 +108,13 @@ class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
         # a group's minimum is its first position past lo, unless lo falls
         # inside the group (or it has no statistics): then read its positions
         inside = [g for g in groups if g[1] is None or g[1] <= lo < g[2]]
-        seq = self._rows(pf, inside, lo, None, [self.seq_col]).column(self.seq_col)
+        seq = self._rows(pf, inside, lo, None, ["change_seq"]).column("change_seq")
         firsts = [pc.min(seq).as_py(), *(mn for _, mn, _ in groups if mn is not None and mn > lo)]
         firsts = [s for s in firsts if s is not None]
         if not firsts:
             return iter([]), start
         table = self._rows(pf, groups, lo, min(firsts) + self.batch_size - 1, self.schema.names)
-        end = {"seq": pc.max(table.column(self.seq_col)).as_py()}
+        end = {"seq": pc.max(table.column("change_seq")).as_py()}
         return self._batches(table), end
 
     def readBetweenOffsets(self, start: dict, end: dict) -> Iterator:

@@ -84,23 +84,20 @@ def snapshot_envelope(df: DataFrame, dropped_cols: Mapping[str, str] | None = No
 
 
 def change_window_scan(
-    feed: DataFrame,
-    low,
-    high,
-    idx_col: str = "change_seq",
-    op_col: str = "__operation",
-    batch_size: int | None = None,
+    feed: DataFrame, low, high=None, batch_size: int | None = None
 ) -> DataFrame:
     """S1/P5: the incremental change scan — rows strictly after ``low`` and at
-    most ``high``, PreUpdate filtered out (P3). The reference decomposes this
-    into a 3-branch UNION ALL for index-seek friendliness
-    (``sql_queries.py:238-254``); with a columnar scan a single range filter
-    is optimal — Catalyst pushes both bounds into the reader."""
-    out = feed.filter(
-        (F.col(idx_col) > F.lit(low))
-        & (F.col(idx_col) <= F.lit(high))
-        & F.col(op_col).isin(1, 2, 4)
-    )
+    most ``high`` (either bound None: unbounded), PreUpdate filtered out
+    (P3), and with ``batch_size`` the first that many in ``change_seq``
+    order: the reference's TOP(batch) pull and every pull trigger's poll
+    (T3). The reference decomposes this into a 3-branch UNION ALL for
+    index-seek friendliness (``sql_queries.py:238-254``); with a columnar
+    scan a single range filter is optimal — Catalyst pushes both bounds into
+    the reader."""
+    preds = [f"change_seq > {int(low)}"] if low is not None else []
+    if high is not None:
+        preds.append(f"change_seq <= {int(high)}")
+    out = feed.filter(" AND ".join([*preds, "__operation IN (1, 2, 4)"]))
     if batch_size is not None:
-        out = out.orderBy(idx_col).limit(batch_size)
+        out = out.orderBy("change_seq").limit(batch_size)
     return out

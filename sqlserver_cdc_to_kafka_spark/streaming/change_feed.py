@@ -9,7 +9,7 @@ transaction, and emits delete tombstones. Spark-first restatement:
   is ``readStream`` against Kafka/Delta-CDF; for a keyset-polled JDBC source
   the same batching happens in ``foreachBatch`` pull mode — each trigger
   issues the S1 window scan from the last committed position, bounded by
-  ``max_rows_per_trigger`` (the reference's lagging-table backpressure:
+  ``batch_size`` (the reference's lagging-table backpressure:
   a full batch means "still behind, poll again immediately").
 - **progress** (T2): the sink's manifest is the only progress state, as the
   compacted progress topic is the reference's (progress_tracking.py:235-258).
@@ -20,9 +20,11 @@ transaction, and emits delete tombstones. Spark-first restatement:
 - **order** (O1/O2): within a micro-batch, emission is ordered by the change
   index (repartitionByRange + sortWithinPartitions at scale).
 
-This module implements the pieces as composable functions plus a
-MicroBatcher that drives them over a static feed — the pull-mode shape.
-The same functions are wired to ``readStream`` sources unchanged.
+This module holds the pull-mode pieces: the tombstone expansion and a
+MicroBatcher that polls a static feed through the S1 scan
+(``sources/snapshot.change_window_scan``). The ``readStream`` path reads
+through ``sources/cdc_datasource`` and commits with
+``pipeline_run.foreach_batch_writer`` instead.
 """
 
 from __future__ import annotations
@@ -34,29 +36,14 @@ from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from sqlserver_cdc_to_kafka_spark.model.envelope import OP_DELETE
+from sqlserver_cdc_to_kafka_spark.sources.snapshot import change_window_scan
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 from sqlserver_cdc_to_kafka_spark.tables import quote
 
 DEFAULT_BATCH_SIZE = 2000  # options.py:282-285
 
 
-def poll_window(
-    feed: DataFrame,
-    after,
-    idx_col: str = "change_seq",
-    max_rows: int = DEFAULT_BATCH_SIZE,
-) -> DataFrame:
-    """One trigger's pull (S1 as a micro-batch): rows strictly after the
-    committed position (all rows when ``after`` is None), capped at
-    max_rows in index order — ``maxOffsetsPerTrigger`` semantics (T3)."""
-    if after is not None:
-        feed = feed.filter(f"{quote(idx_col)} > {int(after)}")
-    return feed.orderBy(idx_col).limit(max_rows)
-
-
-def with_tombstones(
-    batch: DataFrame, key_cols: Sequence[str], op_col: str = "__operation"
-) -> DataFrame:
+def with_tombstones(batch: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """T6: append a (key, null-payload) companion row after every Delete.
     Tombstones sort directly after their delete event (same index, higher
     emission order) so compaction applies them last. One pass over
@@ -64,12 +51,12 @@ def with_tombstones(
     so an uncached batch is evaluated once."""
     out = batch.selectExpr(
         "*",
-        f"explode(CASE WHEN {quote(op_col)} = {OP_DELETE} THEN array(false, true) "
+        f"explode(CASE WHEN __operation = {OP_DELETE} THEN array(false, true) "
         "ELSE array(false) END) AS __tombstone",
     )
     return out.selectExpr(
         *[
-            quote(c) if c in key_cols or c == op_col
+            quote(c) if c in key_cols or c == "__operation"
             else f"CASE WHEN NOT __tombstone THEN {quote(c)} END AS {quote(c)}"
             for c in batch.columns
         ],
@@ -87,16 +74,17 @@ class MicroBatcher:
 
     feed: DataFrame
     sink: TransactionalDirSink
-    idx_col: str = "change_seq"
     batch_size: int = DEFAULT_BATCH_SIZE
     # commits a batch to ``sink``, truthy when it did; ``sink.commit_batch``
     # when None
     commit: Callable[[DataFrame], object] | None = None
 
     def run_once(self, snapshot: DataFrame | None = None) -> int:
-        """One trigger: poll → commit, with the ``snapshot`` rows (on the
-        feed's columns) in the same commit when given (T7: a snapshot page
-        and a change batch share one write and one manifest record).
+        """One trigger: poll (the S1 scan past the committed position, so
+        PreUpdate rows are dropped, P3) → commit, with the ``snapshot`` rows
+        (on the feed's columns) in the same commit when given (T7: a
+        snapshot page and a change batch share one write and one manifest
+        record).
         Returns the change rows polled, 0 when the feed holds nothing past
         the committed position. A full batch (== batch_size) signals a
         lagging table: the caller should immediately re-trigger (T3)
@@ -104,8 +92,8 @@ class MicroBatcher:
         Observation on the commit's own write, so polling costs no job of
         its own."""
         obs = Observation()
-        batch = poll_window(
-            self.feed, self.sink.last_progress(), self.idx_col, self.batch_size
+        batch = change_window_scan(
+            self.feed, self.sink.last_progress(), batch_size=self.batch_size
         ).observe(obs, F.expr("count(1) AS rows"))
         if snapshot is not None:
             batch = batch.unionByName(snapshot)
@@ -114,11 +102,12 @@ class MicroBatcher:
             return 0
         return obs.get["rows"]
 
-    def run_to_completion(self, max_batches: int = 10_000) -> int:
+    def run_to_completion(self) -> int:
+        """Trigger until a batch comes back short of ``batch_size``: the
+        feed is drained. Returns the change rows polled."""
         total = 0
-        for _ in range(max_batches):
+        while True:
             n = self.run_once()
             total += n
             if n < self.batch_size:
-                break
-        return total
+                return total

@@ -16,13 +16,11 @@ from __future__ import annotations
 import json
 import sys
 import time
-from dataclasses import asdict, dataclass, field
+from dataclasses import asdict, dataclass
 from typing import TextIO
 
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
-
-from sqlserver_cdc_to_kafka_spark.tables import quote
 
 METRICS_REPORTING_INTERVAL_S = 20  # constants.py:8
 
@@ -82,44 +80,31 @@ class AccumulatingReporter(ReporterBase):
         self.emitted.append(metrics)
 
 
-def observed_batch(batch: DataFrame, op_col: str = "__operation", idx_col: str = "change_seq"):
+def observed_batch(batch: DataFrame):
     """Attach an Observation computing the interval counters INSIDE the
     batch's own job — the accumulator (accumulator.py:93-181) without a
     second scan. ``rows`` counts tombstones (T6); ``deletes`` does not —
-    a tombstone keeps its delete's operation. Returns (observed_df,
-    observation)."""
-    op = quote(op_col)
-    not_tomb = " AND NOT __tombstone" if "__tombstone" in batch.columns else ""
+    a tombstone keeps its delete's operation but not its ``change_seq``.
+    Returns (observed_df, observation)."""
     obs = Observation()
     observed = batch.observe(
         obs,
         F.expr("count(1) AS rows"),
-        F.expr(f"count_if({op} = 1{not_tomb}) AS deletes"),
-        F.expr(f"count_if({op} = 2) AS inserts"),
-        F.expr(f"count_if({op} = 4) AS updates"),
-        F.expr(f"count_if({op} = 0) AS snapshots"),
-        F.expr(f"max({quote(idx_col)}) AS max_index"),
+        F.expr("count_if(__operation = 1 AND change_seq IS NOT NULL) AS deletes"),
+        F.expr("count_if(__operation = 2) AS inserts"),
+        F.expr("count_if(__operation = 4) AS updates"),
+        F.expr("count_if(__operation = 0) AS snapshots"),
+        F.expr("max(change_seq) AS max_index"),
     )
     return observed, obs
 
 
 def report_batch(
-    obs_values: dict,
-    batch_id: int,
-    batch_seconds: float,
-    reporters: list[ReporterBase],
+    obs_values: dict, batch_id: int, t0: float, reporters: list[ReporterBase]
 ) -> BatchMetrics:
-    m = BatchMetrics(
-        interval_start_ts=time.time(),
-        batch_id=batch_id,
-        rows=obs_values["rows"],
-        deletes=obs_values["deletes"],
-        inserts=obs_values["inserts"],
-        updates=obs_values["updates"],
-        snapshots=obs_values["snapshots"],
-        max_index=obs_values["max_index"],
-        batch_seconds=batch_seconds,
-    )
+    """Report the batch ``observed_batch`` counted, whose commit started at
+    ``t0`` (``time.time()``) and has just returned."""
+    m = BatchMetrics(t0, batch_id, batch_seconds=time.time() - t0, **obs_values)
     for r in reporters:
         r.emit(m)
     return m

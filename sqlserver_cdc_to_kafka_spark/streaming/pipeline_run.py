@@ -6,17 +6,16 @@ tombstones appended after deletes (T6) → both, with their progress,
 committed in ONE write and one manifest record (T2, manifest transaction;
 the page's key and row count are observed on that write, so a trigger is
 one Spark job over scan-only inputs) → metrics observed in-job and reported
-(A9/X2) →
-self-validation over the engine's own committed output (§5's validators as
-product).
+(A9/X2).
 
 The sink's manifest is the run's only progress state: a run reads its
 snapshot resume key and its change position from it, and the sink numbers
 each commit, so a run that crashed resumes where its last commit left off
 and a run over a finished sink commits nothing.
 
-This is pull-mode (bounded feeds) — the test harness shape; the same
-composition drives ``readStream`` sources unchanged."""
+This is pull-mode over bounded feeds. A ``readStream`` source commits
+through ``foreach_batch_writer`` instead, with no snapshot, tombstones or
+metrics."""
 
 from __future__ import annotations
 
@@ -53,7 +52,6 @@ class PipelineRun:
     sink: TransactionalDirSink
     reporters: list[ReporterBase] = field(default_factory=list)
     batch_size: int = 2000
-    rows_committed: int = 0
 
     def run(self) -> int:
         """Interleave snapshot pages with change micro-batches, as the
@@ -62,7 +60,7 @@ class PipelineRun:
         is one write: the next snapshot page and the next change batch
         commit together, under one manifest record that carries both the
         page's key (observed on that write) and the change position.
-        Returns total rows committed (snapshot rows + change rows +
+        Returns the rows this call committed (snapshot rows + change rows +
         tombstones)."""
         snap = SnapshotStream(
             self.source_table,
@@ -70,35 +68,29 @@ class PipelineRun:
             self.batch_size,
             last_key=self.sink.last_progress(field="snapshot_key"),
         )
-        mb = MicroBatcher(
-            self.change_feed,
-            self.sink,
-            batch_size=self.batch_size,
-            commit=lambda batch: self._commit(
-                with_tombstones(batch, self.key_cols), snapshot_key=snap.page_key
-            ),
-        )
+        committed = 0
+
+        def commit(batch: DataFrame) -> int:
+            nonlocal committed
+            observed, obs = observed_batch(with_tombstones(batch, self.key_cols))
+            t0 = time.time()
+            # one write: it fulfils the metrics Observation, the page's and
+            # the sink's, which supplies the manifest position
+            record = self.sink.commit_batch(observed, snapshot_key=snap.page_key)
+            if record is None:
+                return 0
+            m = report_batch(obs.get, record["batch_id"], t0, self.reporters)
+            committed += m.rows
+            return m.rows
+
+        mb = MicroBatcher(self.change_feed, self.sink, batch_size=self.batch_size, commit=commit)
         while True:
             page = snap.next_page()
             # on the feed's types, as all the sink's batches (the read time too)
             rows = None if page is None else snapshot_rows(page, self.change_feed, cast=True)
             emitted = mb.run_once(rows)
             if snap.completed and emitted < self.batch_size:
-                return self.rows_committed
-
-    # -- internals ---------------------------------------------------------
-
-    def _commit(self, batch: DataFrame, snapshot_key=None) -> int:
-        observed, obs = observed_batch(batch)
-        t0 = time.time()
-        # one write: it fulfils the metrics Observation, the page's and the
-        # sink's, which supplies the manifest position
-        record = self.sink.commit_batch(observed, snapshot_key=snapshot_key)
-        if record is None:
-            return 0
-        m = report_batch(obs.get, record["batch_id"], time.time() - t0, self.reporters)
-        self.rows_committed += m.rows
-        return m.rows
+                return committed
 
 
 def foreach_batch_writer(sink: TransactionalDirSink):

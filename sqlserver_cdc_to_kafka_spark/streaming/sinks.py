@@ -52,7 +52,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from sqlserver_cdc_to_kafka_spark.tables import first_data_file, quote
+from sqlserver_cdc_to_kafka_spark.tables import first_data_file
 
 
 def _key_text(value) -> str:
@@ -281,13 +281,7 @@ class TransactionalDirSink:
         reader = spark.read if schema is None else spark.read.schema(schema)
         return reader.parquet(*dirs)
 
-    def compact(
-        self,
-        spark: SparkSession,
-        key_cols: list[str],
-        order_col: str = "change_seq",
-        tombstone_col: str = "__tombstone",
-    ) -> int:
+    def compact(self, spark: SparkSession, key_cols: list[str]) -> int:
         """Log compaction (the background process a compacted Kafka topic
         gets from the broker): collapse the batches ``read_committed`` reads
         to the last record per key, dropping keys whose final record is a
@@ -311,15 +305,14 @@ class TransactionalDirSink:
         # NULL order values are either snapshot rows (base state — oldest for
         # their key: every change logically follows the backfill, T7) or
         # tombstones (emitted right after their delete — newest for the key)
-        tomb = quote(tombstone_col)
         ordk = (
-            f"named_struct('o', CASE WHEN {tomb} THEN {2**62} "
-            f"ELSE coalesce({quote(order_col)}, -1) END, 't', CAST({tomb} AS INT)) AS __ordk"
+            f"named_struct('o', CASE WHEN __tombstone THEN {2**62} "
+            "ELSE coalesce(change_seq, -1) END, 't', CAST(__tombstone AS INT)) AS __ordk"
         )
         last = last_value_per_key(
             df.selectExpr("*", ordk), key_cols, "__ordk", drop_deleted=False
         )
-        live = last.filter(f"NOT {tomb}").drop("__ordk")
+        live = last.filter("NOT __tombstone").drop("__ordk")
 
         max_id = self._next_id(records) - 1
         # capture progress BEFORE rewriting the manifest

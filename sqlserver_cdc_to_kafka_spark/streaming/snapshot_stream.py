@@ -36,8 +36,8 @@ class SnapshotStream:
     key_cols: list[str]
     batch_size: int = 2000
     last_key: Sequence | None = None
-    completed: bool = False
-    _seen: Observation | None = field(default=None, repr=False)
+    completed: bool = field(default=False, init=False)
+    _seen: Observation | None = field(default=None, init=False, repr=False)
 
     def next_page(self) -> DataFrame | None:
         """The next page, not yet run; None once the table is exhausted

@@ -35,7 +35,6 @@ def test_stream_reads_everything_in_rate_limited_batches(spark, sf_dir, tmp_path
         spark.readStream.format("cdc_change_feed")
         .option("path", path)
         .option("batchSize", 2000)
-        .option("seqColumn", "change_seq")
         .load()
     )
     assert stream.isStreaming

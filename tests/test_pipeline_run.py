@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import time
 from collections import Counter
 
 import pytest
@@ -15,7 +16,11 @@ from sqlserver_cdc_to_kafka_spark.fixtures.cdc_events import cdc_events
 from sqlserver_cdc_to_kafka_spark.model.envelope import OP_DELETE
 from sqlserver_cdc_to_kafka_spark.operators.compaction import last_value_per_key
 from sqlserver_cdc_to_kafka_spark.operators.validation import topic_summary
-from sqlserver_cdc_to_kafka_spark.streaming.metrics import AccumulatingReporter
+from sqlserver_cdc_to_kafka_spark.streaming.change_feed import MicroBatcher
+from sqlserver_cdc_to_kafka_spark.streaming.metrics import (
+    AccumulatingReporter,
+    ReporterBase,
+)
 from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import PipelineRun
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 from sqlserver_cdc_to_kafka_spark.tables import load_table
@@ -135,6 +140,72 @@ def test_pipeline_resume_after_crash(spark, sf_dir, tmp_path):
     assert run3.run() == 0
     assert rep3.emitted == []
     assert sink3.read_committed(spark).count() == n_total
+
+
+def test_second_run_returns_only_its_own_rows(spark, sf_dir, tmp_path):
+    """run() returns the rows that call committed: a second run over the
+    drained sink commits and reports nothing, so it returns 0."""
+    _, _, sink, rep, run = _setup(spark, sf_dir, tmp_path)
+    assert run.run() == sink.read_committed(spark).count()
+    n_reports = len(rep.emitted)
+    assert run.run() == 0
+    assert len(rep.emitted) == n_reports
+
+
+class _EmitClock(ReporterBase):
+    """Notes the wall clock at each emit beside the record emitted."""
+
+    def __init__(self) -> None:
+        self.emitted: list[tuple] = []
+
+    def emit(self, metrics) -> None:
+        self.emitted.append((metrics, time.time()))
+
+
+def test_batch_metrics_interval_starts_before_its_commit(spark, sf_dir, tmp_path):
+    """A batch's metrics interval starts when its commit starts, so it ends
+    (start + batch_seconds) no later than the record is emitted."""
+    orders = load_table(spark, sf_dir, "orders")
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+    clock = _EmitClock()
+    PipelineRun(
+        spark, orders, cdc_events(spark, sf_dir), ["o_orderkey"], sink, [clock],
+        batch_size=700,
+    ).run()
+    assert len(clock.emitted) == len(sink.committed_batches())
+    for m, emitted_at in clock.emitted:
+        assert m.interval_start_ts + m.batch_seconds <= emitted_at
+
+
+def test_pull_drivers_drop_preupdate_rows(spark, sf_dir, tmp_path):
+    """Both pull drivers poll through the S1 scan, which drops PreUpdate
+    rows (op 3, P3). Over a feed whose updates of even ``o_orderkey`` are
+    relabelled op 3, PipelineRun and a standalone MicroBatcher commit none
+    of them, every other change exactly once, and end at the last position
+    of the rest. The stream path (``cdc_change_feed``) serves its feed file
+    as given and is not covered here."""
+    feed = cdc_events(spark, sf_dir).withColumn(
+        "__operation",
+        F.expr("CASE WHEN __operation = 4 AND o_orderkey % 2 = 0 THEN 3 ELSE __operation END"),
+    )
+    kept = feed.filter("__operation != 3")
+    assert feed.count() > kept.count()
+    change_cols = ["__operation", "change_seq", "o_orderkey", "o_orderstatus"]
+    want = Counter(tuple(r) for r in kept.select(change_cols).collect())
+    last = kept.agg(F.max("change_seq")).collect()[0][0]
+    orders = load_table(spark, sf_dir, "orders")
+
+    run_sink = TransactionalDirSink(str(tmp_path / "run"), "orders")
+    PipelineRun(spark, orders, feed, ["o_orderkey"], run_sink, batch_size=700).run()
+    mb_sink = TransactionalDirSink(str(tmp_path / "mb"), "orders")
+    assert MicroBatcher(feed, mb_sink, batch_size=700).run_to_completion() == len(want)
+
+    for sink in (run_sink, mb_sink):
+        out = sink.read_committed(spark)
+        changes = out.filter("change_seq IS NOT NULL").select(change_cols).collect()
+        assert Counter(tuple(r) for r in changes) == want
+        assert sink.last_progress() == last
+    assert run_sink.read_committed(spark).filter("__operation = 0").count() == orders.count()
 
 
 CRASH_POINTS = range(1, 4)

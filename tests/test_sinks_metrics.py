@@ -4,6 +4,7 @@
 from __future__ import annotations
 
 import json
+import time
 
 from pyspark.sql import functions as F
 
@@ -84,10 +85,12 @@ def test_observed_metrics_and_reporters(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir).filter(F.col("change_seq") < 1500)
     n_feed = feed.count()
     observed, obs = observed_batch(feed)
+    t0 = time.time()
     observed.write.format("noop").mode("overwrite").save()
     mem = AccumulatingReporter()
     fpath = tmp_path / "metrics.json"
-    m = report_batch(obs.get, 7, 0.5, [mem, LocalFileReporter(str(fpath))])
+    m = report_batch(obs.get, 7, t0, [mem, LocalFileReporter(str(fpath))])
+    assert m.interval_start_ts == t0
     assert m.rows == n_feed
     assert m.rows == m.deletes + m.inserts + m.updates + m.snapshots
     assert m.max_index == feed.agg(F.max("change_seq")).collect()[0][0]
