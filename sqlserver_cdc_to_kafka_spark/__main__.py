@@ -25,10 +25,14 @@ surface (``python -m cdc_kafka``, reference ``options.py`` flag names,
         their offsets. Dry-run (report only) unless --execute is set, like
         the reference.
 
-Flags reuse the reference's names (``--db-row-batch-size``,
-``--table-include-regex``, ``--topic-name-template``, …) so an operator of
-the reference can carry a deployment's settings across; ``--options-json``
-accepts the full `EngineConfig` as JSON (F16).
+The option flags reuse the reference's names (``--table-include-regex``,
+``--topic-name-template``, …) for the six options pipeline mode acts on: the
+four table regexes, the topic-name template and
+``--disable-deletion-tombstones``. ``--options-json`` accepts the same six as
+an `EngineConfig` JSON object (F16) and rejects any other key; a flag given
+on the command line overrides its JSON value. The reference's other options
+(``--db-row-batch-size``, ``--lsn-gap-handling``, ``--partition-count``, …)
+would change nothing here, so they are not accepted.
 """
 
 from __future__ import annotations
@@ -51,17 +55,11 @@ def _build_parser() -> argparse.ArgumentParser:
     p.add_argument("--options-json", default=None,
                    help="EngineConfig as a JSON object (overrides flag defaults)")
     # reference-named option flags (options.py)
-    p.add_argument("--db-row-batch-size", type=int, default=None,
-                   help="snapshot page size; batch mode writes the snapshot in one scan")
     p.add_argument("--table-include-regex", default=None)
     p.add_argument("--table-exclude-regex", default=None)
     p.add_argument("--snapshot-table-include-regex", default=None)
     p.add_argument("--snapshot-table-exclude-regex", default=None)
     p.add_argument("--topic-name-template", default=None)
-    p.add_argument("--progress-topic-name", default=None)
-    p.add_argument("--message-serializer", default=None, choices=("json", "avro"))
-    p.add_argument("--lsn-gap-handling", default=None)
-    p.add_argument("--partition-count", type=int, default=None)
     p.add_argument("--disable-deletion-tombstones", action="store_true")
     # modes
     p.add_argument("--run-validations", action="store_true")
@@ -92,25 +90,17 @@ def _config_from_args(args: argparse.Namespace) -> EngineConfig:
     else:
         cfg = EngineConfig()
     overrides = {
-        "db_row_batch_size": args.db_row_batch_size,
         "table_include_regex": args.table_include_regex,
         "table_exclude_regex": args.table_exclude_regex,
         "snapshot_table_include_regex": args.snapshot_table_include_regex,
         "snapshot_table_exclude_regex": args.snapshot_table_exclude_regex,
         "topic_name_template": args.topic_name_template,
-        "progress_topic_name": args.progress_topic_name,
-        "message_serializer": args.message_serializer,
-        "lsn_gap_handling": args.lsn_gap_handling,
-        "partition_count": args.partition_count,
     }
     for k, v in overrides.items():
         if v is not None:
             setattr(cfg, k, v)
     if args.disable_deletion_tombstones:
         cfg.disable_deletion_tombstones = True
-    cfg.run_validations = args.run_validations
-    cfg.report_progress_only = args.report_progress_only
-    cfg.__post_init__()  # re-validate after overrides
     return cfg
 
 
@@ -243,14 +233,14 @@ def main(argv: Sequence[str] | None = None) -> int:
         return 0
 
     read_only = (
-        cfg.run_validations
-        or cfg.report_progress_only
+        args.run_validations
+        or args.report_progress_only
         or args.show_snapshot_history
         or args.find_truncation_candidates
     )
-    if cfg.run_validations:
+    if args.run_validations:
         _run_named_queries(spark, args.sf_dir, _VALIDATION_CHECKS)
-    if cfg.report_progress_only:
+    if args.report_progress_only:
         _run_named_queries(spark, args.sf_dir, ("val_progress_rollup",))
     if args.show_snapshot_history:
         _run_named_queries(spark, args.sf_dir, ("val_snapshot_history",))

@@ -32,7 +32,3 @@ def update_mask_to_fields(mask_col: str, field_names: Sequence[str]) -> Column:
         f"x -> x IS NOT NULL)"
     )
 
-
-def all_fields_updated(field_names: Sequence[str]) -> Column:
-    """The snapshot/insert/delete fast path: every captured column."""
-    return F.array([F.lit(f) for f in field_names])

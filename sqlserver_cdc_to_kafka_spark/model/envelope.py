@@ -34,6 +34,10 @@ OPERATIONS = {
     OP_POST_UPDATE: "PostUpdate",
 }
 
+# The operations a change scan emits: PreUpdate rows carry the before-image
+# of a PostUpdate and are dropped (P3, ``cdc_kafka/sql_queries.py:265``).
+CHANGE_OPERATIONS = (OP_DELETE, OP_INSERT, OP_POST_UPDATE)
+
 ENVELOPE_COLS = [
     "__operation",
     "__event_time",

@@ -28,7 +28,6 @@ def last_value_per_key(
     key_cols: Sequence[str],
     order_col: str,
     drop_deleted: bool = True,
-    op_col: str = "__operation",
 ) -> DataFrame:
     """Latest row per key by ``order_col``; with ``drop_deleted`` keys whose
     final operation is Delete are compacted away (tombstone semantics)."""
@@ -38,12 +37,12 @@ def last_value_per_key(
     )
     out = agg.selectExpr(*map(quote, key_cols), *[f"__last.{c} AS {c}" for c in payload])
     if drop_deleted:
-        out = out.filter(f"{quote(op_col)} != {OP_DELETE}")
+        out = out.filter(f"__operation != {OP_DELETE}")
     return out
 
 
-def tombstones(df: DataFrame, key_cols: Sequence[str], op_col: str = "__operation") -> DataFrame:
+def tombstones(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     """The ``(key, null)`` companion records for every Delete event (T6)."""
-    return df.filter(F.col(op_col) == OP_DELETE).select(
+    return df.filter(F.col("__operation") == OP_DELETE).select(
         *key_cols, F.lit(None).cast("string").alias("value")
     )

@@ -11,19 +11,16 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sqlserver_cdc_to_kafka_spark.model.envelope import CHANGE_OPERATIONS
 
-def count_by_operation(
-    df: DataFrame,
-    idx_bound=None,
-    idx_col: str = "change_seq",
-    op_col: str = "__operation",
-) -> DataFrame:
+
+def count_by_operation(df: DataFrame, idx_bound=None) -> DataFrame:
     """A1 (``sql_queries.py:170-192``): COUNT(*) GROUP BY operation below a
     change-index bound, PreUpdate rows excluded (P3, ``sql_queries.py:265``)."""
-    out = df.filter(F.col(op_col).isin(1, 2, 4))
+    out = df.filter(F.col("__operation").isin(*CHANGE_OPERATIONS))
     if idx_bound is not None:
-        out = out.filter(F.col(idx_col) <= F.lit(idx_bound))
-    return out.groupBy(op_col).agg(F.count("*").alias("n"))
+        out = out.filter(F.col("change_seq") <= F.lit(idx_bound))
+    return out.groupBy("__operation").agg(F.count("*").alias("n"))
 
 
 def key_range_count(df: DataFrame, key_cols: Sequence[str], low: tuple, high: tuple) -> DataFrame:
@@ -46,12 +43,6 @@ def max_key(df: DataFrame, key_cols: Sequence[str]) -> DataFrame:
     ``TOP 1 ... ORDER BY pk DESC`` without the sort: ``max(struct(pk...))``."""
     m = df.agg(F.max(F.struct(*[F.col(c) for c in key_cols])).alias("k"))
     return m.select(*[F.col(f"k.{c}").alias(c) for c in key_cols])
-
-
-def bounded_count(df: DataFrame, limit: int) -> DataFrame:
-    """A3 (``sql_queries.py:136-145``): 'is the table smaller than n' —
-    COUNT over a LIMIT subquery, never a full count."""
-    return df.limit(limit).agg(F.count("*").alias("n"))
 
 
 def rows_per_second(df: DataFrame, ts_col: str) -> DataFrame:

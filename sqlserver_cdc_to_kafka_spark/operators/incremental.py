@@ -32,14 +32,12 @@ def incremental_count_by(
     feed: DataFrame,
     key_cols: Sequence[str],
     dim_col: str,
-    order_col: str = "change_seq",
-    op_col: str = "__operation",
 ) -> DataFrame:
     """(dim, maintained_count) from the feed's deltas alone — one window to
     recover previous values, one union-free delta projection, one sum."""
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
+    w = Window.partitionBy(*key_cols).orderBy("change_seq")
     with_prev = feed.withColumn("__prev_dim", F.lag(dim_col).over(w))
-    op = F.col(op_col)
+    op = F.col("__operation")
     plus = with_prev.filter(op.isin(OP_INSERT, OP_POST_UPDATE)).select(
         F.col(dim_col).alias("dim"), F.lit(1).alias("delta")
     )
@@ -59,8 +57,6 @@ def incremental_sum_by(
     key_cols: Sequence[str],
     dim_col: str,
     value_col,
-    order_col: str = "change_seq",
-    op_col: str = "__operation",
 ) -> DataFrame:
     """(dim, maintained_sum) from deltas alone — the measure-maintenance
     generalization of incremental_count_by: an insert contributes +value
@@ -70,14 +66,14 @@ def incremental_sum_by(
     / scaled long): float value deltas would accumulate rounding the
     recompute doesn't have.  Same plan shape as the count form: one
     window, one delta projection, one sum."""
-    w = Window.partitionBy(*key_cols).orderBy(order_col)
+    w = Window.partitionBy(*key_cols).orderBy("change_seq")
     val = value_col if not isinstance(value_col, str) else F.col(value_col)
     with_prev = (
         feed.withColumn("__val", val)
         .withColumn("__prev_dim", F.lag(dim_col).over(w))
         .withColumn("__prev_val", F.lag("__val").over(w))
     )
-    op = F.col(op_col)
+    op = F.col("__operation")
     plus = with_prev.filter(op.isin(OP_INSERT, OP_POST_UPDATE)).select(
         F.col(dim_col).alias("dim"), F.col("__val").alias("delta")
     )

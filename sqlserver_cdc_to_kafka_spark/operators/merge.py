@@ -22,11 +22,11 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def common_frontier(feeds: Sequence[DataFrame], idx_col: str = "change_seq"):
+def common_frontier(feeds: Sequence[DataFrame]):
     """``common_lsn_limit`` = min over feeds of each feed's max index
     (main.py:299,308-309). Returns a scalar (small driver-side reduction —
     one row per feed, same as the reference's per-table frontier dict)."""
-    maxes = [f.agg(F.max(idx_col).alias("m")) for f in feeds]
+    maxes = [f.agg(F.max("change_seq").alias("m")) for f in feeds]
     u = maxes[0]
     for m in maxes[1:]:
         u = u.unionByName(m)
@@ -37,7 +37,6 @@ def common_frontier(feeds: Sequence[DataFrame], idx_col: str = "change_seq"):
 def ordered_merge(
     feeds: Sequence[DataFrame],
     frontier,
-    idx_col: str = "change_seq",
     global_rank: bool = False,
     lo=None,
 ) -> DataFrame:
@@ -49,11 +48,11 @@ def ordered_merge(
     merged = feeds[0]
     for f in feeds[1:]:
         merged = merged.unionByName(f)
-    merged = merged.filter(F.col(idx_col) <= F.lit(frontier))
+    merged = merged.filter(F.col("change_seq") <= F.lit(frontier))
     if global_rank:
         bounds = (lo, frontier) if lo is not None else None
-        return global_order_rank(merged, idx_col, bounds=bounds)
-    return merged.orderBy(idx_col)
+        return global_order_rank(merged, "change_seq", bounds=bounds)
+    return merged.orderBy("change_seq")
 
 
 def global_order_rank(
@@ -188,25 +187,6 @@ def grouped_prefix_sum(
             (F.sum(value_col).over(w) + F.col("__offset")).cast("bigint"),
         )
         .drop("__bucket", "__offset")
-    )
-
-
-def order_regression_check(
-    df: DataFrame,
-    partition_cols: Sequence[str],
-    order_col: str,
-    idx_col: str,
-) -> DataFrame:
-    """O2/W1: count regressions of ``idx_col`` along ``order_col`` within each
-    partition (validation.py:184-193). An in-order feed yields 0 everywhere."""
-    w = Window.partitionBy(*partition_cols).orderBy(order_col)
-    lagged = df.withColumn("__prev_idx", F.lag(idx_col).over(w))
-    return (
-        lagged.groupBy(*partition_cols)
-        .agg(
-            F.count_if(F.col("__prev_idx") > F.col(idx_col)).alias("regressions"),
-            F.count("*").alias("n_rows"),
-        )
     )
 
 

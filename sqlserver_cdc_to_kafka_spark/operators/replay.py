@@ -35,8 +35,6 @@ def replay_merge(
     target: DataFrame,
     feed: DataFrame,
     key_cols: Sequence[str],
-    order_col: str = "change_seq",
-    op_col: str = "__operation",
 ) -> DataFrame:
     """Final state of ``target`` after applying ``feed``:
 
@@ -51,11 +49,11 @@ def replay_merge(
     in one pass of each input.
     """
     value_cols = [c for c in target.columns if c not in key_cols]
-    last = last_value_per_key(feed, key_cols, order_col, drop_deleted=False, op_col=op_col)
+    last = last_value_per_key(feed, key_cols, "change_seq", drop_deleted=False)
     feed_side = last.select(
         *key_cols,
         F.lit(True).alias("__matched"),
-        (F.col(op_col) == OP_DELETE).alias("__is_delete"),
+        (F.col("__operation") == OP_DELETE).alias("__is_delete"),
         *[F.col(c).alias(f"__u_{c}") for c in value_cols],
     )
     # WHEN MATCHED THEN UPDATE: take the feed's value even if it is NULL —

@@ -27,16 +27,13 @@ def topic_summary(
     df: DataFrame,
     group_cols: Sequence[str],
     key_cols: Sequence[str],
-    idx_col: str = "change_seq",
-    op_col: str = "__operation",
-    event_time_col: str = "__event_time",
 ) -> DataFrame:
     """A7 (``validation.py:109-197``): per-group counts by operation, index
     extrema, exact distinct keys, latest event time — one pass, map-side
     partial aggregation. The reference's exact Python key-sets become
     ``countDistinct`` (exact) — swap for ``approx_count_distinct`` at 100 TB."""
     key = F.struct(*[F.col(c) for c in key_cols])
-    op = F.col(op_col)
+    op = F.col("__operation")
     return df.groupBy(*group_cols).agg(
         F.count("*").alias("n_total"),
         F.count_if(op == OP_SNAPSHOT).alias("n_snapshots"),
@@ -44,9 +41,9 @@ def topic_summary(
         F.count_if(op == OP_POST_UPDATE).alias("n_updates"),
         F.count_if(op == OP_DELETE).alias("n_deletes"),
         F.countDistinct(key).alias("n_distinct_keys"),
-        F.min(idx_col).alias("min_idx"),
-        F.max(idx_col).alias("max_idx"),
-        F.max(epoch_micros(df, event_time_col)).alias("max_event_time_us"),
+        F.min("change_seq").alias("min_idx"),
+        F.max("change_seq").alias("max_idx"),
+        F.max(epoch_micros(df, "__event_time")).alias("max_event_time_us"),
     )
 
 

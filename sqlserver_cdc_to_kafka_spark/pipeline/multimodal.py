@@ -296,17 +296,6 @@ def _audio_feature_frame(pdf: pd.DataFrame, id_col: str) -> pd.DataFrame:
     )
 
 
-def extract_audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched audio feature extraction over an existing payload
-    column (see _audio_feature_frame for the real decode)."""
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield _audio_feature_frame(pdf, id_col)
-
-    return df.mapInPandas(_extract, schema=AUDIO_SCHEMA)
-
-
 def synth_and_extract_audio_features(
     df: DataFrame, id_col: str = "doc_id"
 ) -> DataFrame:

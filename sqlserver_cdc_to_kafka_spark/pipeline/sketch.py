@@ -46,19 +46,6 @@ def _cms_bucket(depth_col, item_col):
     )
 
 
-def count_min_counters(df: DataFrame, item_col: str) -> DataFrame:
-    """(depth, bucket, count) — the CMS counter table for a stream of
-    items."""
-    inst = df.select(F.col(item_col).alias("item")).withColumn(
-        "depth", F.explode(F.sequence(F.lit(0), F.lit(CMS_DEPTH - 1)))
-    )
-    return (
-        inst.withColumn("bucket", _cms_bucket(F.col("depth"), F.col("item")))
-        .groupBy("depth", "bucket")
-        .agg(F.count("*").alias("count"))
-    )
-
-
 def count_min_estimates(df: DataFrame, item_col: str) -> DataFrame:
     """(item, exact_count, cms_estimate): every distinct item's true count
     next to its CMS point estimate (min over depth rows of the hashed

@@ -67,10 +67,6 @@ def read_varint(raw: bytes, pos: int = 0) -> tuple[int, int]:
         shift += 7
 
 
-def pack_float(v: float) -> bytes:
-    return struct.pack("<f", v)
-
-
 def pack_double(v: float) -> bytes:
     return struct.pack("<d", v)
 

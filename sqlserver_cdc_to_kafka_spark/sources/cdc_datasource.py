@@ -14,7 +14,8 @@ and exposes the change position as its STREAMING OFFSET:
   ``batchSize`` positions from the first ``change_seq`` past ``start``, and
   the last position it read as the end offset — the reference's TOP(batch)
   pull past its last committed position. A gap in the log costs no empty
-  micro-batch;
+  micro-batch. Like the pull path's S1 scan it drops PreUpdate rows (P3):
+  only ``__operation`` values in ``CHANGE_OPERATIONS`` are emitted;
 - it is a ``SimpleDataSourceStreamReader``: the read runs in the driver's
   long-lived source runner when Spark asks for the latest offset, as plain
   pyarrow over the row groups whose footer statistics reach into the range,
@@ -36,16 +37,27 @@ from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
+from sqlserver_cdc_to_kafka_spark.model.envelope import CHANGE_OPERATIONS
 
-def _int64(value: int):
-    """An Arrow int64 scalar built from its bytes. pyarrow turns a Python
-    value into Arrow data (``pa.scalar``, a bare int in ``pc.greater``, a
-    ``filters=`` read) only after importing pandas, about 0.2–0.3 s of CPU
-    in each fresh source runner, and Spark starts one per stream query."""
+
+def _ints(values, type_):
+    """An Arrow integer array of ``type_`` built from its bytes. pyarrow
+    turns a Python value into Arrow data (``pa.scalar``, ``pa.array``, a
+    bare int in ``pc.greater``, a ``filters=`` read) only after importing
+    pandas, about 0.2–0.3 s of CPU in each fresh source runner, and Spark
+    starts one per stream query."""
     import pyarrow as pa
 
-    data = pa.py_buffer(value.to_bytes(8, "little", signed=True))
-    return pa.Array.from_buffers(pa.int64(), 1, [None, data])[0]
+    width = type_.bit_width // 8
+    data = pa.py_buffer(b"".join(v.to_bytes(width, "little", signed=True) for v in values))
+    return pa.Array.from_buffers(type_, len(values), [None, data])
+
+
+def _int64(value: int):
+    """An Arrow int64 scalar (see ``_ints``)."""
+    import pyarrow as pa
+
+    return _ints([value], pa.int64())[0]
 
 
 class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
@@ -86,19 +98,26 @@ class ChangeFeedStreamReader(SimpleDataSourceStreamReader):
         return table.filter(keep)
 
     def _batches(self, table) -> Iterator:
+        """The change rows of ``table`` (PreUpdate rows dropped, P3, as the
+        pull path's S1 scan drops them) as Arrow record batches."""
         # r15 (guide §4): hand Spark Arrow record batches instead of Python
         # row tuples. The driver-side runner requires Spark's Arrow schema
         # exactly, nullability included, hence the cast. A list iterator,
         # not a generator: Spark copy.copy()s the prefetched iterator it
         # caches.
+        import pyarrow.compute as pc
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        ops = table.column("__operation")
+        table = table.filter(pc.is_in(ops, value_set=_ints(CHANGE_OPERATIONS, ops.type)))
         return iter(table.cast(to_arrow_schema(self.schema)).to_batches())
 
     def read(self, start: dict) -> tuple[Iterator, dict]:
         """T3 rate limit: the rows in the ``batchSize`` positions from the
         first ``change_seq`` past ``start``, so a gap in the log costs no
-        empty micro-batch. The end offset is the last position read."""
+        empty micro-batch. The end offset is the last position read, a
+        PreUpdate row's included, so a window of only PreUpdate rows still
+        advances."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 

@@ -21,7 +21,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sqlserver_cdc_to_kafka_spark.model.envelope import OP_SNAPSHOT
+from sqlserver_cdc_to_kafka_spark.model.envelope import CHANGE_OPERATIONS, OP_SNAPSHOT
 from sqlserver_cdc_to_kafka_spark.tables import quote, sql_string
 
 
@@ -97,7 +97,8 @@ def change_window_scan(
     preds = [f"change_seq > {int(low)}"] if low is not None else []
     if high is not None:
         preds.append(f"change_seq <= {int(high)}")
-    out = feed.filter(" AND ".join([*preds, "__operation IN (1, 2, 4)"]))
+    ops = ", ".join(map(str, CHANGE_OPERATIONS))
+    out = feed.filter(" AND ".join([*preds, f"__operation IN ({ops})"]))
     if batch_size is not None:
         out = out.orderBy("change_seq").limit(batch_size)
     return out

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections import Counter
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -217,6 +218,58 @@ def test_reader_reads_only_row_groups_in_range(tmp_path, monkeypatch, stats):
         offset = end
     assert sizes == [300, 300, 300, 100] * 2
     assert seqs == seq.to_pylist()
+
+
+def test_stream_drops_preupdate_rows(spark, sf_dir, tmp_path):
+    """The stream path drops PreUpdate rows (op 3, P3) as the pull path's S1
+    scan does: over a feed whose updates of even ``o_orderkey`` are
+    relabelled op 3, a ``cdc_change_feed`` drain commits none of them and
+    every other change exactly once."""
+    feed = cdc_events(spark, sf_dir).withColumn(
+        "__operation",
+        F.expr("CASE WHEN __operation = 4 AND o_orderkey % 2 = 0 THEN 3 ELSE __operation END"),
+    )
+    stage = tmp_path / "stage"
+    feed.coalesce(1).write.parquet(str(stage))
+    path = str(tmp_path / "feed.parquet")
+    shutil.copyfile(next(stage.glob("part-*.parquet")), path)
+    kept = feed.filter("__operation != 3")
+    assert feed.count() > kept.count()
+    cols = ["__operation", "change_seq", "o_orderkey", "o_orderstatus"]
+    sink = TransactionalDirSink(str(tmp_path / "out"), "orders")
+
+    _drain_into(spark, path, tmp_path / "ckpt", sink, batch_size=700)
+    got = sink.read_committed(spark).select(cols).collect()
+    assert Counter(map(tuple, got)) == Counter(map(tuple, kept.select(cols).collect()))
+    assert sink.last_progress() == kept.agg(F.max("change_seq")).collect()[0][0]
+
+
+def test_reader_advances_past_a_preupdate_only_window(tmp_path):
+    """A window whose rows are all PreUpdate returns no rows but still ends
+    at its last position, in reads and in replays alike, so the stream moves
+    on instead of stalling."""
+    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+
+    from sqlserver_cdc_to_kafka_spark.sources.cdc_datasource import ChangeFeedStreamReader
+
+    path = str(tmp_path / "feed.parquet")
+    seq = pa.array(range(900), pa.int64())
+    ops = pa.array([2] * 300 + [3] * 300 + [4] * 300, pa.int32())
+    pq.write_table(pa.table({"__operation": ops, "change_seq": seq}), path)
+    schema = StructType([StructField("__operation", IntegerType()), StructField("change_seq", LongType())])
+    reader = ChangeFeedStreamReader(schema, {"path": path, "batchSize": 300})
+    reads = []
+    offset = {"seq": -1}
+    while True:
+        batches, end = reader.read(offset)
+        rows = [r for b in batches for r in zip(*(c.to_pylist() for c in b.columns))]
+        if end == offset:
+            break
+        assert rows == [r for b in reader.readBetweenOffsets(offset, end)
+                        for r in zip(*(c.to_pylist() for c in b.columns))]
+        reads.append((end["seq"], {op for op, _ in rows}))
+        offset = end
+    assert reads == [(299, {2}), (599, set()), (899, {4})]
 
 
 def test_reader_imports_no_pandas(tmp_path):

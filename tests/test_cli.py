@@ -13,7 +13,6 @@ import pytest
 from pyspark.sql.types import TimestampNTZType, TimestampType
 
 from sqlserver_cdc_to_kafka_spark.__main__ import main
-from sqlserver_cdc_to_kafka_spark.config import EngineConfig
 from sqlserver_cdc_to_kafka_spark.fixtures.cdc_events import cdc_events
 from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import PipelineRun
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
@@ -30,7 +29,6 @@ def _emitted(capsys):
 
 def test_pipeline_mode_writes_topic(spark, sf_dir, tmp_path, capsys):
     rc = main(["--sf-dir", sf_dir, "--sink-dir", str(tmp_path),
-               "--db-row-batch-size", "500",
                "--topic-name-template", "{schema_name}.{table_name}.cdc"])
     assert rc == 0
     out = _emitted(capsys)
@@ -54,17 +52,14 @@ def _rows_without_event_time(df) -> Counter:
     return Counter(map(repr, df.drop("__event_time").collect()))
 
 
-@pytest.mark.parametrize("batch_size", [None, 500])
+@pytest.mark.parametrize("batch_size", [2000, 500])
 def test_pipeline_mode_matches_paged_snapshot(spark, sf_dir, tmp_path, capsys,
                                               batch_size):
     """The one-scan CLI writes the same rows as the keyset-paged snapshot
     unified with the change feed, whatever the page size, and leaves no
     cached data behind."""
-    argv = ["--sf-dir", sf_dir, "--sink-dir", str(tmp_path)]
-    if batch_size is not None:
-        argv += ["--db-row-batch-size", str(batch_size)]
     persisted = _persisted(spark)
-    assert main(argv) == 0
+    assert main(["--sf-dir", sf_dir, "--sink-dir", str(tmp_path)]) == 0
     assert _persisted(spark) == persisted
     (row,) = [r for r in _emitted(capsys) if r["kind"] == "topic_written"]
     written = spark.read.parquet(row["path"])
@@ -72,7 +67,7 @@ def test_pipeline_mode_matches_paged_snapshot(spark, sf_dir, tmp_path, capsys,
 
     pager = SnapshotStream(
         load_table(spark, sf_dir, "orders"), ["o_orderkey"],
-        batch_size=batch_size or EngineConfig().db_row_batch_size,
+        batch_size=batch_size,
     )
     pages = []
     while (p := pager.next_page()) is not None:
@@ -124,8 +119,7 @@ def test_pipeline_mode_requires_sink_dir(sf_dir):
 
 
 def test_options_json_roundtrip(sf_dir, tmp_path, capsys):
-    cfg = json.dumps({"topic_name_template": "{table_name}_only",
-                      "db_row_batch_size": 1000})
+    cfg = json.dumps({"topic_name_template": "{table_name}_only"})
     rc = main(["--sf-dir", sf_dir, "--sink-dir", str(tmp_path),
                "--options-json", cfg])
     assert rc == 0
@@ -134,9 +128,26 @@ def test_options_json_roundtrip(sf_dir, tmp_path, capsys):
 
 
 def test_invalid_option_value_rejected(sf_dir):
-    with pytest.raises(ValueError):
+    """An option the engine would not act on fails loudly, naming the key,
+    before any mode runs."""
+    with pytest.raises(TypeError, match="lsn_gap_handling"):
         main(["--sf-dir", sf_dir, "--run-validations",
-              "--lsn-gap-handling", "bogus"])
+              "--options-json", '{"lsn_gap_handling": "ignore"}'])
+
+
+@pytest.mark.parametrize("flag", [
+    ["--db-row-batch-size", "500"],
+    ["--lsn-gap-handling", "ignore"],
+    ["--partition-count", "3"],
+    ["--message-serializer", "avro"],
+    ["--progress-topic-name", "_p"],
+], ids=lambda f: f[0])
+def test_removed_flags_exit_2(flag, capsys):
+    """The reference flags this engine never acted on are not accepted."""
+    with pytest.raises(SystemExit) as exc:
+        main(flag)
+    assert exc.value.code == 2
+    assert "unrecognized arguments" in capsys.readouterr().err
 
 
 def test_reset_progress_tool(spark, sf_dir, tmp_path, capsys):

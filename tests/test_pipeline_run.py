@@ -182,8 +182,8 @@ def test_pull_drivers_drop_preupdate_rows(spark, sf_dir, tmp_path):
     rows (op 3, P3). Over a feed whose updates of even ``o_orderkey`` are
     relabelled op 3, PipelineRun and a standalone MicroBatcher commit none
     of them, every other change exactly once, and end at the last position
-    of the rest. The stream path (``cdc_change_feed``) serves its feed file
-    as given and is not covered here."""
+    of the rest. The stream path's twin is
+    ``test_cdc_datasource.test_stream_drops_preupdate_rows``."""
     feed = cdc_events(spark, sf_dir).withColumn(
         "__operation",
         F.expr("CASE WHEN __operation = 4 AND o_orderkey % 2 = 0 THEN 3 ELSE __operation END"),
