@@ -18,6 +18,8 @@ surface (``python -m cdc_kafka``, reference ``options.py`` flag names,
     ... --find-truncation-candidates
         the find_truncation_opportunities.py tool: per-column truncation
         report.
+    These four read-only modes report over --sf-dir's fixture tables and never
+    read a sink, so combined with --sink-dir they exit 2 naming the flag.
     ... --reset-progress --topic-names T1,T2 [--progress-kind K] [--execute]
         the progress_reset_tool.py analog (progress_reset_tool.py:12):
         append tombstone progress records for the named topics' sinks under
@@ -50,8 +52,8 @@ def _build_parser() -> argparse.ArgumentParser:
     p.add_argument("--sf-dir", default="/root/testdata/sf0.001",
                    help="directory of the source parquet tables")
     p.add_argument("--sink-dir", default=None,
-                   help="output directory for pipeline mode (required unless "
-                        "a read-only mode flag is set)")
+                   help="output directory for pipeline mode (required there; "
+                        "rejected with a read-only mode flag)")
     p.add_argument("--options-json", default=None,
                    help="EngineConfig as a JSON object (overrides flag defaults)")
     # reference-named option flags (options.py)
@@ -116,6 +118,15 @@ _VALIDATION_CHECKS = (
     "val_snapshot_key_order",
     "val_snapshot_history",
 )
+
+
+# the read-only modes (argparse dest) and the registered queries each runs
+_READ_ONLY_MODES = {
+    "run_validations": _VALIDATION_CHECKS,
+    "report_progress_only": ("val_progress_rollup",),
+    "show_snapshot_history": ("val_snapshot_history",),
+    "find_truncation_candidates": ("val_truncation_report",),
+}
 
 
 def _emit(kind: str, **payload: object) -> None:
@@ -208,6 +219,13 @@ def main(argv: Sequence[str] | None = None) -> int:
             print(name)
         return 0
 
+    read_only = [mode for mode in _READ_ONLY_MODES if getattr(args, mode)]
+    if read_only and args.sink_dir:
+        flag = "--" + read_only[0].replace("_", "-")
+        print(f"error: {flag} reports over --sf-dir and does not read "
+              "--sink-dir; drop one of them", file=sys.stderr)
+        return 2
+
     from sqlserver_cdc_to_kafka_spark.session import get_spark
 
     spark = get_spark("cdc-engine-cli")
@@ -232,20 +250,8 @@ def main(argv: Sequence[str] | None = None) -> int:
                   rows=[r.asDict() for r in rows])
         return 0
 
-    read_only = (
-        args.run_validations
-        or args.report_progress_only
-        or args.show_snapshot_history
-        or args.find_truncation_candidates
-    )
-    if args.run_validations:
-        _run_named_queries(spark, args.sf_dir, _VALIDATION_CHECKS)
-    if args.report_progress_only:
-        _run_named_queries(spark, args.sf_dir, ("val_progress_rollup",))
-    if args.show_snapshot_history:
-        _run_named_queries(spark, args.sf_dir, ("val_snapshot_history",))
-    if args.find_truncation_candidates:
-        _run_named_queries(spark, args.sf_dir, ("val_truncation_report",))
+    for mode in read_only:
+        _run_named_queries(spark, args.sf_dir, _READ_ONLY_MODES[mode])
     if read_only:
         return 0
     if not args.sink_dir:

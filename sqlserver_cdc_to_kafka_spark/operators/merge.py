@@ -1,4 +1,4 @@
-"""Ordered merge of per-table change feeds (SURVEY §2.5 O1/O2, §2.9 T4).
+"""Global-order operators over change feeds (SURVEY §2.5 O1/O2, §2.9 T4).
 
 The reference's heart is a K-way priority-heap merge: change rows from all
 tables are pushed into a heapq keyed by ChangeIndex and popped in global
@@ -6,12 +6,13 @@ order up to ``common_lsn_limit`` — the min of per-table high-water marks
 (``cdc_kafka/main.py:299-350``). Out-of-order production raises
 (``main.py:329-331``).
 
-Spark-first restatement: the heap is replaced by ``unionByName`` + a bounded
-filter + a sort on the change-index column. Per micro-batch this is a single
-Tungsten sort; at 100 TB scale the global order is produced with
-``repartitionByRange`` on the index (range-partitioned, sorted within
-partitions => totally ordered across partition IDs) instead of a
-single-partition sort — both paths are provided.
+Spark-first restatement: the heap is a union of the feeds, a filter at the
+common frontier and a rank on the change-index column. The query
+``cdc_ordered_merge`` (``queries/cdc._merged_with_rank``) computes the
+frontier (per-feed max, then min) in one aggregate and ranks with
+``global_order_rank``. The helpers here give a global order without a
+single-partition sort: range-bucket the order key, window within each
+bucket in parallel, and add the prefix total of the earlier buckets.
 """
 
 from __future__ import annotations
@@ -20,39 +21,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def common_frontier(feeds: Sequence[DataFrame]):
-    """``common_lsn_limit`` = min over feeds of each feed's max index
-    (main.py:299,308-309). Returns a scalar (small driver-side reduction —
-    one row per feed, same as the reference's per-table frontier dict)."""
-    maxes = [f.agg(F.max("change_seq").alias("m")) for f in feeds]
-    u = maxes[0]
-    for m in maxes[1:]:
-        u = u.unionByName(m)
-    row = u.agg(F.min("m").alias("frontier")).collect()[0]
-    return row["frontier"]
-
-
-def ordered_merge(
-    feeds: Sequence[DataFrame],
-    frontier,
-    global_rank: bool = False,
-    lo=None,
-) -> DataFrame:
-    """Union all feeds, bound by the common frontier, order globally by the
-    change index. With ``global_rank=True`` a ``global_rank`` column makes the
-    total order hash-visible — computed scalably (see global_order_rank),
-    never as a single-partition window. Pass ``lo`` (the known min index) to
-    skip the rank's bounds pass."""
-    merged = feeds[0]
-    for f in feeds[1:]:
-        merged = merged.unionByName(f)
-    merged = merged.filter(F.col("change_seq") <= F.lit(frontier))
-    if global_rank:
-        bounds = (lo, frontier) if lo is not None else None
-        return global_order_rank(merged, "change_seq", bounds=bounds)
-    return merged.orderBy("change_seq")
 
 
 def global_order_rank(

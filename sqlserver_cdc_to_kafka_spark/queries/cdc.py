@@ -17,11 +17,7 @@ from sqlserver_cdc_to_kafka_spark.operators.compaction import (
     tombstones,
 )
 from sqlserver_cdc_to_kafka_spark.operators.counts import count_by_operation
-from sqlserver_cdc_to_kafka_spark.operators.merge import (
-    common_frontier,
-    global_order_rank,
-    ordered_merge,
-)
+from sqlserver_cdc_to_kafka_spark.operators.merge import global_order_rank
 from sqlserver_cdc_to_kafka_spark.operators.replay import replay_merge
 from sqlserver_cdc_to_kafka_spark.operators.validation import lag_regressions
 from sqlserver_cdc_to_kafka_spark.registry import query
@@ -99,9 +95,10 @@ def _merged_with_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r16, guide §1.2 "don't compute things you throw away"): the r15 form
     # materialized the union of the two filter branches, which ran the
     # cdc_events explode TWICE (AQE reused the scan exchange but not the
-    # Generate) and filtered 2x|feed| rows to keep each row once. The K-way
-    # union itself stays exercised by operators/merge.ordered_merge's tests;
-    # the frontier semantics (per-feed max, then min) are unchanged below.
+    # Generate) and filtered 2x|feed| rows to keep each row once. The
+    # frontier semantics (per-feed max, then min) are unchanged below, and
+    # the oracle (_MERGE_CTES) still unions the two feeds, so the query's
+    # oracle checks the fused merge against the K-way one (O1, T4).
     #
     # persisted: the frontier collect below plus the returned lazy rank plan
     # both read `merged`, so the cache must outlive this function — release
@@ -115,7 +112,7 @@ def _merged_with_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max(F.when(F.col("change_seq") % 2 == 0, F.col("change_seq"))).alias("m0"),
         F.max(F.when(F.col("change_seq") % 2 == 1, F.col("change_seq"))).alias("m1"),
     ).collect()[0]
-    frontier = min(row["m0"], row["m1"])  # common_frontier, fused
+    frontier = min(row["m0"], row["m1"])  # the common frontier (T4)
     bounded = merged.filter(F.col("change_seq") <= F.lit(frontier))
     ranked = global_order_rank(bounded, "change_seq", bounds=(row["lo"], frontier))
     return ranked.select(

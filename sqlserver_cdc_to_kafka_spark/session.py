@@ -4,6 +4,9 @@ Local-mode settings mirror what a cluster deployment would set per-job:
 AQE on (runtime re-planning / skew-join handling), shuffle partitions sized
 to cores (not the 200 default), Arrow enabled for the pandas-UDF slow path,
 UTC session timezone so timestamp semantics are stable across engines.
+Every Python process Spark launches gets ``OMP_NUM_THREADS`` = task cpus, as
+UDF workers already do, so numpy's BLAS pool (imported via pyarrow by each
+stream query's source runner) starts one thread, not one per core.
 """
 
 from __future__ import annotations
@@ -48,6 +51,7 @@ def get_spark(
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "8"))
     if shuffle_partitions is None:
         shuffle_partitions = cpus
+    task_cpus = (extra_conf or {}).get("spark.task.cpus", "1")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -60,6 +64,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         # call-site capture: 50 when().alias() columns took 1,955 py4j commands, not 455
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # reaches the JVM's Python processes only, not this driver's os.environ
+        .config("spark.executorEnv.OMP_NUM_THREADS", task_cpus)
         .config(
             "spark.driver.memory",
             os.environ.get("SPARK_DRIVER_MEMORY", DEFAULT_DRIVER_MEMORY),

@@ -20,6 +20,11 @@ from sqlserver_cdc_to_kafka_spark.streaming.pipeline_run import foreach_batch_wr
 from sqlserver_cdc_to_kafka_spark.streaming.sinks import TransactionalDirSink
 
 
+# the driver's own OMP_NUM_THREADS as this process inherited it, read before
+# any test starts a session
+_DRIVER_OMP = os.environ.get("OMP_NUM_THREADS")
+
+
 def _materialize_feed(spark, sf_dir, tmp_path):
     feed = cdc_events(spark, sf_dir)
     stage = tmp_path / "stage"
@@ -294,3 +299,60 @@ assert "pandas" not in sys.modules
 """
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     subprocess.run([sys.executable, "-c", child], cwd=root, check=True)
+
+
+def test_python_processes_get_omp_num_threads_of_task_cpus(spark, tmp_path):
+    """Every Python process Spark launches gets ``OMP_NUM_THREADS`` = task
+    cpus ("1" here), so numpy's BLAS pool starts one thread: the planner
+    that calls a data source's ``schema()``, the stream's source runner
+    that calls ``read()``, and a ``mapInPandas`` worker as before. The
+    driver's own environment keeps what it inherited."""
+    from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
+
+    def omp():
+        return os.environ.get("OMP_NUM_THREADS", "unset")
+
+    class OmpReader(SimpleDataSourceStreamReader):
+        def initialOffset(self):
+            return {"n": 0}
+
+        def read(self, start):
+            if start["n"]:
+                return iter([]), start
+            return iter([(omp(),)]), {"n": 1}
+
+    class OmpSource(DataSource):
+        @classmethod
+        def name(cls):
+            return "omp_probe"
+
+        def schema(self):
+            return f"planner_omp_{omp()} string"
+
+        def simpleStreamReader(self, schema):
+            return OmpReader()
+
+    spark.dataSource.register(OmpSource)
+    q = (
+        spark.readStream.format("omp_probe").load()
+        .writeStream.format("memory")
+        .queryName("omp_probe_out")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    got = spark.sql("SELECT * FROM omp_probe_out")
+    assert got.columns == ["planner_omp_1"]  # the planner's value
+    assert [tuple(r) for r in got.collect()] == [("1",)]  # the runner's value
+
+    def worker_omp(batches):
+        for b in batches:
+            yield b.assign(omp=omp())
+
+    (row,) = spark.range(1).mapInPandas(worker_omp, "id long, omp string").collect()
+    assert row["omp"] == "1"
+    assert os.environ.get("OMP_NUM_THREADS") == _DRIVER_OMP

@@ -114,6 +114,24 @@ def test_tool_modes(sf_dir, capsys):
                                        "val_truncation_report"}
 
 
+@pytest.mark.parametrize("flag", [
+    "--run-validations",
+    "--report-progress-only",
+    "--show-snapshot-history",
+    "--find-truncation-candidates",
+])
+def test_read_only_modes_reject_sink_dir(flag, sf_dir, tmp_path, capsys):
+    """A read-only mode reports over --sf-dir's tables and never reads a
+    sink, so a --sink-dir next to it is an error naming the flag, not
+    silently ignored."""
+    rc = main(["--sf-dir", sf_dir, "--sink-dir", str(tmp_path), flag])
+    assert rc == 2
+    out, err = capsys.readouterr()
+    assert flag in err and "--sink-dir" in err
+    assert not out
+    assert not list(tmp_path.iterdir())
+
+
 def test_pipeline_mode_requires_sink_dir(sf_dir):
     assert main(["--sf-dir", sf_dir]) == 2
 

@@ -9,7 +9,6 @@ from sqlserver_cdc_to_kafka_spark.operators.compaction import (
     last_value_per_key,
     tombstones,
 )
-from sqlserver_cdc_to_kafka_spark.operators.merge import common_frontier, ordered_merge
 from sqlserver_cdc_to_kafka_spark.operators.replay import replay_merge, set_reconciliation
 from sqlserver_cdc_to_kafka_spark.operators.validation import missing_offsets
 
@@ -52,15 +51,6 @@ def test_replay_merge_insert_update_delete(spark):
     out = replay_merge(target, feed.select("k", "__operation", "change_seq", "v"), ["k"])
     rows = {r["k"]: r["v"] for r in out.collect()}
     assert rows == {1: "new", 3: "keep", 9: "ins2"}
-
-
-def test_ordered_merge_frontier_bounds_unread_feeds(spark):
-    a = _feed(spark, [(1, 2, 10, "a"), (2, 2, 30, "b")])
-    b = _feed(spark, [(3, 2, 5, "c"), (4, 2, 20, "d")])
-    frontier = common_frontier([a, b])
-    assert frontier == 20  # min(max_a=30, max_b=20)
-    out = ordered_merge([a, b], frontier)
-    assert [r["change_seq"] for r in out.collect()] == [5, 10, 20]
 
 
 def test_missing_offsets_gaps(spark):
